@@ -15,14 +15,14 @@ package graft.table
   * cost an extra file read (~1% at the chosen sizing).
   *
   * Sizing: ~10 bits/row, k=7 probes → ≈0.8% false-positive rate. Bits are
-  * capped at 2²⁵ (512 KB of longs) per file; past that the fpp degrades
-  * gracefully rather than the manifest sidecar growing unboundedly — at
-  * the design point files are Z-clustered ~100 MB units (≪ 3M rows), well
-  * under the cap.
+  * capped at 2²⁵ (512 KB of longs) per file, and the writer rolls to a new
+  * file at `MaxBits / BitsPerKey` (≈3.36M) rows
+  * ([[org.apache.spark.sql.GraftParquetDirect.MaxFileRows]]), so no file
+  * ever loads its bitset past the design point.
   *
-  * Hashing: the ROW side is hashed with Spark's `xxhash64` (codegen'd,
-  * computed inside the write-time scan); probe positions derive from that
-  * 64-bit value with Kirsch–Mitzenmacher double hashing (h₁ + i·h₂), so
+  * Hashing: the ROW side is hashed with Spark's `xxhash64` (computed as
+  * `XXH64.hashLong` inside the write task); probe positions derive from
+  * that 64-bit value with Kirsch–Mitzenmacher double hashing (h₁ + i·h₂), so
   * the driver can test literal keys by evaluating the same XxHash64
   * expression — bit-identical to the write side by construction.
   */
@@ -83,7 +83,6 @@ object Bloom {
   }
 }
 
-// The distributed per-file Bloom build lives in [[UnitStatsAgg]] since
-// round 4: bitsets are accumulated in the SAME one-job stats pass that
-// produces the histogram and index sidecars (only compact partial buffers
-// cross the exchange, never keys).
+// Every per-file bitset is built inside the write task that writes the
+// file ([[UnitTaskStats]]), sized from that file's own row count; tasks
+// ship bitsets, never key hashes.

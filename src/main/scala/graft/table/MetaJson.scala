@@ -26,14 +26,14 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * lineage-id summary of the shard's entries (usually ONE — a shard is
   * written by a single commit), letting the streaming-ingest idempotence
   * check ([[graft.table.SnapshotStore.committedLineage]]) read the root
-  * alone instead of parsing every shard per micro-batch; `None` means a
-  * root written before the field existed — unknown, never assumed empty
-  * (the reader falls back to a full parse). */
+  * alone instead of parsing every shard per micro-batch. It is REQUIRED:
+  * a row without it cannot say which units it holds, so the parser
+  * refuses it rather than guess. */
 final case class ShardMeta(path: String, entries: Int,
                            minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
-                           lineages: Option[Seq[String]] = None)
+                           lineages: Seq[String])
 
 object MetaJson {
 
@@ -59,8 +59,7 @@ object MetaJson {
 
   /** Additive schema evolution: every field except the identity pair
     * (path, rows) reads through a default, so manifests written BEFORE a
-    * field existed still parse after it's added — the same contract the
-    * legacy parquet manifest path gives kind/seq. Geometric stats default
+    * field existed still parse after it's added. Geometric stats default
     * to the fail-open full range (a pruner may only skip a file it can
     * PROVE disjoint; unknown stats must never skip). */
   def parseManifest(json: String): Seq[FileEntry] =
@@ -101,9 +100,7 @@ object MetaJson {
       o.put("minZ", sm.minZ); o.put("maxZ", sm.maxZ)
       o.put("minLat", sm.minLat); o.put("maxLat", sm.maxLat)
       o.put("minLon", sm.minLon); o.put("maxLon", sm.maxLon)
-      sm.lineages.foreach { ls =>
-        val la = o.putArray("lineages"); ls.foreach(la.add)
-      }
+      val la = o.putArray("lineages"); sm.lineages.foreach(la.add)
     }
     val eArr = root.putArray("entries")
     inline.foreach(e => eArr.add(entryNode(e)))
@@ -113,11 +110,12 @@ object MetaJson {
   /** Parse either manifest form: (shards, inline entries). Flat manifests
     * come back as (empty, all entries). Shard bounds read through the
     * same fail-open defaults as entry stats — an unknown bound makes the
-    * shard un-prunable, never silently skipped. */
+    * shard un-prunable, never silently skipped; a shard row without its
+    * `lineages` summary is refused. */
   def parseManifestRoot(json: String): (Seq[ShardMeta], Seq[FileEntry]) = {
     // ONE readTree for both halves — a second parse of the same document
     // doubled driver-side cost on every snapshot read (flat manifests can
-    // be MBs before the sharding threshold, and legacy tables stay flat)
+    // be MBs before the sharding threshold)
     val root = mapper.readTree(json)
     val entries = entriesFrom(root)
     val shardsNode = Option(root.get("shards")).map(_.asInstanceOf[ArrayNode])
@@ -128,14 +126,15 @@ object MetaJson {
         Option(o.get(n)).map(_.asDouble()).getOrElse(dv)
       (0 until arr.size()).map { i =>
         val o = arr.get(i)
-        // absent lineages node stays None (pre-field roots: UNKNOWN, the
-        // reader must full-parse) — never defaulted to the empty list,
-        // which would silently claim "no lineages in this shard"
-        val lin = Option(o.get("lineages")).map { ln =>
-          val a = ln.asInstanceOf[ArrayNode]
-          (0 until a.size()).map(j => a.get(j).asText())
-        }
-        ShardMeta(o.get("path").asText(), o.get("entries").asInt(),
+        val path = o.get("path").asText()
+        // never defaulted to the empty list, which would silently claim
+        // "no lineages in this shard" and let a committed unit re-append
+        val a = Option(o.get("lineages")).map(_.asInstanceOf[ArrayNode])
+          .getOrElse(throw new IllegalStateException(
+            s"manifest-list row for shard $path has no `lineages` summary: " +
+              "written by a retired manifest format that is not read"))
+        val lin = (0 until a.size()).map(j => a.get(j).asText())
+        ShardMeta(path, o.get("entries").asInt(),
           l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
           d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
           d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),

@@ -18,9 +18,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   *
   * `seq` is the Iceberg-style sequence number: the snapshot id of the
   * commit that introduced the entry, PERSISTED so delete scoping never
-  * depends on the physical row order of the manifest (manifests written
-  * before the field existed get their row index as the sequence — the
-  * exact ordering semantics they were written under). */
+  * depends on the physical row order of the manifest. */
 final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
@@ -33,8 +31,7 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   *
   * {{{
   * <root>/data/<lineage>-<uuid>/part-*.parquet        immutable data files
-  * <root>/meta/snap-<n>                               manifest (JSON of FileEntry;
-  *                                                    legacy parquet DIRS still read)
+  * <root>/meta/snap-<n>                               manifest (JSON of FileEntry)
   * <root>/meta/current                                atomic pointer "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes)
   * <root>/meta/{hist,bloom,index}/<lineage>-<id>.json write-time sidecars
@@ -54,10 +51,10 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * commit therefore writes Iceberg's TWO-LEVEL shape — a manifest LIST
   * whose rows carry per-shard Z/lat-lon union bounds, data entries
   * chunked into shard files — and box reads download only the shards
-  * overlapping the query ([[manifestPartial]]); flat and legacy
-  * manifests still read through the same parser. Commits onto a sharded
-  * parent REUSE its shard files by reference and write only their own
-  * entries as a new shard, so the commit path is O(commit size), not
+  * overlapping the query ([[manifestPartial]]); flat manifests read
+  * through the same parser. Commits onto a sharded parent REUSE its
+  * shard files by reference and write only their own entries as a new
+  * shard, so the commit path is O(commit size), not
   * O(table) ([[writeManifestFile]]); [[compact]] re-chunks globally
   * (Iceberg's rewrite-manifests analog). Key lookups ([[lookupByKey]])
   * prune shards through the lineage summaries: the per-unit Bloom
@@ -160,21 +157,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   validateTableMeta()
 
-  // Legacy-open hazard (round-4 ADVICE): a table written by the pre-pin
-  // format has committed snapshots but no meta/table.json. Auto-pinning at
-  // the next commit would enshrine the OPENER's possibly-wrong curve as
-  // authoritative — after which the CORRECT spelling fails validation
-  // forever, and reads meanwhile silently drop rows. Refuse the implicit
-  // migration: the owner must assert the written layout explicitly via
-  // SnapshotStore.pinLegacyLayout before this table is usable again.
+  // A table with committed snapshots but no meta/table.json was written
+  // by a retired format (or lost its pin). Pinning at the next commit
+  // would enshrine the OPENER's possibly-wrong curve as authoritative —
+  // after which the CORRECT spelling fails validation forever, and reads
+  // meanwhile silently drop rows — so the open is refused.
   if (currentSnapshotId > 0 && tableMetaIfExists().isEmpty)
     throw new IllegalStateException(
-      s"table at $root has committed snapshots but no meta/table.json " +
-        "(pre-pin legacy format). Opening it would pin THIS session's " +
-        s"layout (curve=$curve zRes=$zRes histRes=$histRes) as " +
-        "authoritative even if the data was written differently. Run " +
-        "SnapshotStore.pinLegacyLayout(root, curve, zRes, histRes) with " +
-        "the layout the table was WRITTEN with, then reopen.")
+      s"table at $root has committed snapshots but no meta/table.json: " +
+        "the layout it was written with is unknown, and opening it would " +
+        s"pin THIS session's layout (curve=$curve zRes=$zRes " +
+        s"histRes=$histRes) as authoritative")
 
   /** Pin-or-validate, called from EVERY commit (not just the constructor):
     * two stores constructed on the same empty root both pass the ctor
@@ -195,84 +188,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def currentSnapshotId: Long =
     if (Files.exists(currentPtr)) Files.readString(currentPtr).trim.toLong else 0L
 
-  /** Per-file manifest stats from parquet FOOTERS — a driver-side
-    * metadata read (KBs per file), NOT a second scan of the data just
-    * written. This is the Iceberg stats contract: the writer's row-group
-    * min/max aggregates become the manifest entry.
-    *
-    * Stats FAIL OPEN: if ANY chunk of a column lacks min/max (parquet
-    * omits double stats when a page holds NaN; a column can be absent
-    * entirely), the entry records the full domain range so the file is
-    * never pruned — a narrowed range would silently drop rows from
-    * read(box), violating the superset contract. */
-  /** `only`: the file names a direct write ([[org.apache.spark.sql.GraftParquetDirect]])
-    * reported from its SUCCESSFUL tasks — a failed or speculatively re-run
-    * attempt may orphan a partial file in the unit dir, and filtering the
-    * listing to the reported names keeps such orphans out of the manifest
-    * (readers never list dirs; they open manifest paths). */
-  private def footerStats(unitDir: String, lineageId: String, wallMs: Long,
-                          withZ: Boolean, kind: String = "data",
-                          only: Option[Set[String]] = None): Seq[FileEntry] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(unitDir)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).filter(f => f.getPath.getName.startsWith("part-"))
-      .filter(f => only.forall(_.contains(f.getPath.getName)))
-      .sortBy(_.getPath.getName).toSeq.map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val blocks = reader.getFooter.getBlocks
-          import scala.jdk.CollectionConverters._
-          val rows = blocks.asScala.map(_.getRowCount).sum
-          // (failLo, failHi) is the fail-open full range, returned unless
-          // EVERY chunk of the column carried usable stats
-          def minMax[T](col: String, failLo: T, failHi: T)(
-              cmp: Ordering[T])(get: org.apache.parquet.column.statistics.Statistics[_] => (T, T)): (T, T) = {
-            var mn = failHi; var mx = failLo
-            var matched = 0; var withStats = 0
-            blocks.asScala.foreach(_.getColumns.asScala.foreach { c =>
-              if (c.getPath.toDotString == col) {
-                matched += 1
-                if (c.getStatistics != null && !c.getStatistics.isEmpty &&
-                    c.getStatistics.hasNonNullValue) {
-                  val (a, b) = get(c.getStatistics)
-                  if (withStats == 0 || cmp.lt(a, mn)) mn = a
-                  if (withStats == 0 || cmp.gt(b, mx)) mx = b
-                  withStats += 1
-                }
-              }
-            })
-            if (matched > 0 && withStats == matched) (mn, mx) else (failLo, failHi)
-          }
-          def dbl(col: String): (Double, Double) =
-            minMax(col, -Double.MaxValue, Double.MaxValue)(Ordering.Double.TotalOrdering)(s =>
-              (s.genericGetMin.asInstanceOf[Number].doubleValue(),
-               s.genericGetMax.asInstanceOf[Number].doubleValue()))
-          val (zLo, zHi) =
-            if (withZ) minMax("__z", Long.MinValue, Long.MaxValue)(Ordering.Long)(s =>
-              (s.genericGetMin.asInstanceOf[Number].longValue(),
-               s.genericGetMax.asInstanceOf[Number].longValue()))
-            else (0L, 0L)
-          val (latLo, latHi) = dbl("lat")
-          val (lonLo, lonHi) = dbl("lon")
-          FileEntry(f.getPath.toString, rows, zLo, zHi,
-            latLo, latHi, lonLo, lonHi, lineageId, wallMs, kind)
-        } finally reader.close()
-      }
-      // range-partitioning can leave empty part files: no stats, no rows —
-      // keep them out of the manifest (the old scan-based stats pass
-      // skipped them implicitly)
-      .filter(_.rows > 0)
-  }
-
-  /** Manifest read. Current format: a driver-written JSON FILE — KBs of
-    * metadata, zero Spark jobs (a parquet manifest cost one job to write
-    * and one per read, and commits run once per micro-batch under
-    * streaming ingestion; real Iceberg's manifests are likewise
-    * driver-readable, never a cluster job). Snapshots written by the old
-    * parquet-dataset format still read through the legacy path below. */
+  /** Manifest read: a driver-written JSON FILE — KBs of metadata, zero
+    * Spark jobs (commits run once per micro-batch under streaming
+    * ingestion; real Iceberg's manifests are likewise driver-readable,
+    * never a cluster job). */
   def manifest(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
     manifestPartial(snapshotId, None)._1
 
@@ -293,84 +212,59 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       es.count(e => e.kind == "data" && e.path.nonEmpty)
     if (snapshotId == 0) (Seq.empty, 0)
     else {
-      val p = metaDir.resolve(s"snap-$snapshotId")
-      if (!Files.exists(p))
-        throw new IllegalStateException(
-          s"snapshot $snapshotId is expired or was never committed")
-      if (Files.isRegularFile(p)) {
-        val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-        if (shards.isEmpty) (inline, dataCount(inline))
-        else {
-          // all three prunes are fail-open: a shard with unknown bounds or
-          // an unknown lineage summary always loads — a pruner may only
-          // skip what it can PROVE irrelevant. The curve-range test rides
-          // the query's own merged covering (rangesHint — shards are
-          // chunked by minZ, so their [minZ, maxZ] intervals partition the
-          // key axis after compaction): a shard whose interval meets no
-          // covering range holds no row of any query box, even when its
-          // lat/lon union still overlaps one (per-append shards span wide
-          // boxes). Sound because shards carry ONLY data entries —
-          // tombstones and markers stay inline in the root.
-          val wanted = shards.filter { sm =>
-            boxes.forall(bs => bs.exists(b =>
-              MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
-            rangesHint.forall(_.exists(r =>
-              r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
-            lineageHint.forall(want => sm.lineages.forall(_.exists(want)))
-          }
-          val loaded = inline ++ wanted.flatMap(sm =>
-            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
-          (loaded, shards.map(_.entries).sum + dataCount(inline))
+      val (shards, inline) = readRoot(snapshotId)
+      if (shards.isEmpty) (inline, dataCount(inline))
+      else {
+        // all three prunes are fail-open: a shard with unknown bounds
+        // always loads — a pruner may only skip what it can PROVE
+        // irrelevant. The curve-range test rides the query's own merged
+        // covering (rangesHint — shards are chunked by minZ, so their
+        // [minZ, maxZ] intervals partition the key axis after
+        // compaction): a shard whose interval meets no covering range
+        // holds no row of any query box, even when its lat/lon union
+        // still overlaps one (per-append shards span wide boxes). Sound
+        // because shards carry ONLY data entries — tombstones and markers
+        // stay inline in the root.
+        val wanted = shards.filter { sm =>
+          boxes.forall(bs => bs.exists(b =>
+            MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
+          rangesHint.forall(_.exists(r =>
+            r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
+          lineageHint.forall(sm.lineages.exists)
         }
-      } else {
-        val es = legacyManifest(p.toString)
-        (es, dataCount(es))
+        val loaded = inline ++ wanted.flatMap(sm =>
+          MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
+        (loaded, shards.map(_.entries).sum + dataCount(inline))
       }
     }
   }
 
-  /** Legacy parquet-dataset manifest decode with ADDITIVE schema evolution
-    * (the Iceberg manifest contract): columns added to FileEntry after a
-    * snapshot was written are defaulted, not AnalysisException'd — Spark
-    * does not apply Scala default parameters for a column missing from
-    * parquet, so snapshots written before `kind` existed must be patched
-    * before `.as[FileEntry]`. */
-  private def legacyManifest(dir: String): Seq[FileEntry] = {
-    import spark.implicits._
-    val raw = spark.read.parquet(dir)
-    val hasSeq = raw.columns.contains("seq")
-    var patched = raw
-    if (!patched.columns.contains("kind"))
-      patched = patched.withColumn("kind", lit("data"))
-    if (!hasSeq) patched = patched.withColumn("seq", lit(0L))
-    val rows = patched.as[FileEntry].collect().toSeq
-    // pre-seq manifests: row order WAS the sequence (single coalesced
-    // file) — materialize it so scoping semantics carry over unchanged
-    if (hasSeq) rows
-    else rows.zipWithIndex.map { case (e, i) => e.copy(seq = i.toLong) }
+  /** The snap-N root: (shard rows, inline entries). A snap-N DIRECTORY is
+    * the retired parquet-dataset manifest, which this reader refuses with
+    * one clear error rather than decoding. */
+  private def readRoot(snapshotId: Long): (Seq[ShardMeta], Seq[FileEntry]) = {
+    val p = metaDir.resolve(s"snap-$snapshotId")
+    if (Files.isDirectory(p))
+      throw new IllegalStateException(
+        s"snapshot $snapshotId at $p is a directory: the retired parquet " +
+          "manifest format is not read; only JSON manifest files are")
+    if (!Files.isRegularFile(p))
+      throw new IllegalStateException(
+        s"snapshot $snapshotId is expired or was never committed")
+    MetaJson.parseManifestRoot(Files.readString(p))
   }
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
-    * StreamIngest). On a two-level manifest whose shard rows all carry
-    * the `lineages` summary this reads the ROOT alone (KBs at the
-    * 10⁶-file design point); a root with any pre-summary shard row, a
-    * flat manifest, or a legacy table falls back to the full parse —
-    * an UNKNOWN summary must widen the read, never shrink the set (a
-    * missed lineage would re-append a committed unit: duplicate rows). */
+    * StreamIngest). Reads the ROOT alone: inline entries carry their own
+    * lineage, and every shard row carries its `lineages` summary (KBs at
+    * the 10⁶-file design point). */
   def committedLineage: Set[String] = {
     val cur = currentSnapshotId
     if (cur == 0) Set.empty
     else {
-      val p = metaDir.resolve(s"snap-$cur")
-      if (Files.isRegularFile(p)) {
-        val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-        if (shards.nonEmpty && shards.forall(_.lineages.isDefined))
-          inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages.get)
-        else inline.map(_.lineageId).toSet ++
-          (if (shards.isEmpty) Set.empty[String]
-           else manifest(cur).map(_.lineageId).toSet)
-      } else manifest(cur).map(_.lineageId).toSet
+      val (shards, inline) = readRoot(cur)
+      inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages)
     }
   }
 
@@ -386,14 +280,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   /** Append a (lat, lon, …) DataFrame as one lineage unit: Z-cluster it
     * (repartitionByRange + sortWithinPartitions — the bulk-load pack),
-    * write immutable parquet, derive per-file stats from the written files
-    * themselves, and commit parent-manifest + new entries atomically.
-    * Exactly TWO Spark queries: the clustered write and ONE stats pass
-    * ([[writeSidecars]]) that yields the per-cell histogram, the per-file
-    * Bloom filters, and the persisted index summaries together (the
-    * round-3 protocol re-read the unit once per sidecar, and every
-    * commit/manifest op was itself a Spark job; AQE may split each query
-    * into a few stage-jobs — the budget is pinned in spec). */
+    * write immutable parquet, and commit parent-manifest + new entries
+    * atomically. ONE Spark query: the clustered write, whose tasks also
+    * produce every per-file stat ([[writeUnitFiles]]) — the manifest
+    * entries, the per-cell histogram, the per-file Bloom filters and the
+    * persisted index summaries; the rest is driver JSON (AQE may split the
+    * query into a few stage-jobs — the budget is pinned in spec). `lat`
+    * and `lon` must be `Double` and the Bloom key, when the table has it,
+    * `Long`; any other schema is rejected before a job runs. */
   def append(df: DataFrame, lineageId: String, numPartitions: Int = 0): Long = {
     val t0 = System.nanoTime()
     val parts = if (numPartitions > 0) numPartitions
@@ -406,19 +300,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // storage query ~1.5 s/append (the columnar cache encode/decode costs
     // far more than the cheap scan+derive it saves) — the double scan is
     // the right trade at every scale, exactly as Spark's own sort pays it.
-    // Committer-free direct write (same ParquetWriteSupport bits) with
-    // the unit stats computed IN the write tasks — one job where the
-    // round-5 protocol ran write + footer read + a relational stats
-    // pass. The manifest commit below is the atomicity point, so the
-    // Hadoop commit protocol's ~0.2 s/invocation driver floor buys
-    // nothing here.
+    // Committer-free direct write (same ParquetWriteSupport bits): the
+    // manifest commit below is the atomicity point, so the Hadoop commit
+    // protocol's ~0.2 s/invocation driver floor buys nothing here.
     val uw = writeUnitFiles(
       keyed
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
-      unitDir, lineageId, t0, parts)
+      unitDir, lineageId, t0)
     val t2 = System.nanoTime()
-    writeUnitSidecars(uw, unitDir, lineageId)
+    writeSidecarJson(uw, lineageId)
     SnapshotStore.trace("append.sidecars", t2)
     val t3 = System.nanoTime()
     val snap = commitAppend(uw.entries)
@@ -426,105 +317,58 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     snap
   }
 
-  /** One clustered-unit write: the direct parquet job with
-    * [[UnitTaskStats]] observers threaded through each task, yielding
-    * manifest entries (exact per-file `__z`/lat/lon bounds, fail-open on
-    * NaN or all-null like the footer-stats contract) and the sidecar
-    * inputs with ZERO further passes over the unit. Schemas outside the
-    * observer's preconditions (non-double coords, non-long `__z` or Bloom
-    * key) and Bloom units past [[SnapshotStore.BloomCollectRowsCutoff]]
-    * fall back to the round-5 two-pass protocol (footer read + relational
-    * stats aggregate — `byFile = None` routes [[writeUnitSidecars]]
-    * there), so the scale path for huge Bloom-keyed units is unchanged. */
+  /** A written unit: its manifest entries, and per normalized file path
+    * the in-task stats the sidecars are assembled from. */
   private case class UnitWrite(entries: Seq[FileEntry],
-                               byFile: Option[Seq[(String, FileStats)]],
-                               bloomCol: Option[String],
-                               schema: org.apache.spark.sql.types.StructType)
+                               byFile: Seq[(String, UnitFileStats)],
+                               bloomCol: Option[String])
 
+  /** One clustered-unit write: the direct parquet job with a
+    * [[UnitTaskStats]] observer on every file, yielding the manifest
+    * entries (exact per-file `__z`/lat/lon bounds, fail-open on NaN or
+    * all-null) and the sidecar inputs with ZERO further passes over the
+    * unit. */
   private def writeUnitFiles(clustered: DataFrame, unitDir: String,
-                             lineageId: String, t0: Long,
-                             parts: Int): UnitWrite = {
-    import org.apache.spark.sql.types.{DoubleType, LongType}
+                             lineageId: String, t0: Long): UnitWrite = {
+    import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
     val schema = clustered.schema
-    val names = schema.fieldNames
-    val latOrd = names.indexOf("lat")
-    val lonOrd = names.indexOf("lon")
-    val zOrd = names.indexOf("__z")
-    val keyOrd = bloomKey.map(names.indexOf(_)).getOrElse(-1)
-    val fastOk =
-      latOrd >= 0 && schema(latOrd).dataType == DoubleType &&
-      lonOrd >= 0 && schema(lonOrd).dataType == DoubleType &&
-      zOrd >= 0 && schema(zOrd).dataType == LongType &&
-      (keyOrd < 0 || schema(keyOrd).dataType == LongType)
-    if (!fastOk) {
-      val written = org.apache.spark.sql.GraftParquetDirect.write(clustered, unitDir)
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      SnapshotStore.trace("append.write", t0)
-      val entries = footerStats(unitDir, lineageId, wallMs, withZ = true,
-        only = Some(written.map(_._1).toSet))
-      return UnitWrite(entries, None, None, schema)
+    def ordinal(name: String, want: DataType): Int = {
+      val i = schema.fieldNames.indexOf(name)
+      require(i < 0 || schema(i).dataType == want,
+        s"column '$name' is ${schema(i).dataType.simpleString}; the store " +
+          s"needs ${want.simpleString} (cast it before appending)")
+      i
     }
-    // per-task share of the unit-level cutoff: every task under its
-    // share ⇒ the unit is under the cutoff, and the driver receives at
-    // most cutoff × 8 B of hashes TOTAL — the same bound the round-5
-    // collect_list path documented. A task past its share overflows and
-    // the Bloom work degrades to the distributed UnitStatsAgg pass
-    // (correct either way; a skewed small unit merely loses the
-    // single-pass shortcut).
-    val hashCap =
-      if (keyOrd >= 0)
-        math.max(1L, SnapshotStore.BloomCollectRowsCutoff / math.max(1, parts)).toInt
-      else 0
+    val latOrd = ordinal("lat", DoubleType)
+    val lonOrd = ordinal("lon", DoubleType)
+    val zOrd = ordinal("__z", LongType)
+    val keyOrd = bloomKey.map(ordinal(_, LongType)).getOrElse(-1)
     val res = org.apache.spark.sql.GraftParquetDirect.writeStats(clustered,
-      unitDir, UnitTaskStats.observer(latOrd, lonOrd, zOrd, keyOrd,
-        histRes, hashCap))
+      unitDir, UnitTaskStats.observer(latOrd, lonOrd, zOrd, keyOrd, histRes))
     val wallMs = (System.nanoTime() - t0) / 1000000
     SnapshotStore.trace("append.write", t0)
-    val conf = spark.sessionState.newHadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(unitDir)
-    val fs = dirPath.getFileSystem(conf)
-    val nonEmpty = res.filter(_._2 > 0)
-    val entries = nonEmpty.map { case (name, rows, s) =>
-      FileEntry(
-        fs.makeQualified(new org.apache.hadoop.fs.Path(dirPath, name)).toString,
-        rows, s.minZ, s.maxZ, s.minLat, s.maxLat, s.minLon, s.maxLon,
-        lineageId, wallMs)
-    }
-    val totalRows = nonEmpty.map(_._2).sum
-    val taskHashesOk = keyOrd < 0 ||
-      (totalRows <= SnapshotStore.BloomCollectRowsCutoff &&
-        nonEmpty.forall(!_._3.hashOverflow))
-    val byFile =
-      if (!taskHashesOk) None // relational UnitStatsAgg pass sizes the unit's bitsets
-      else Some {
-        val bits =
-          if (keyOrd >= 0 && nonEmpty.nonEmpty)
-            Bloom.bitsFor(nonEmpty.map(_._2).max)
-          else 0
-        nonEmpty.zip(entries).map { case ((_, _, s), e) =>
-          val bs =
-            if (keyOrd < 0) Array.emptyLongArray
-            else {
-              val b = new Array[Long](bits / 64)
-              s.hashes.foreach(Bloom.add(b, _))
-              b
-            }
-          (SnapshotStore.normalizePath(e.path), FileStats(bs, s.leaves))
-        }.sortBy(_._1)
-      }
-    UnitWrite(entries, byFile,
-      if (keyOrd >= 0) bloomKey else None, schema)
+    val files = fileEntries(unitDir, res, lineageId, wallMs, "data")
+    UnitWrite(files.map(_._1),
+      files.map { case (e, s) => (normPath(e.path), s) }.sortBy(_._1),
+      if (keyOrd >= 0) bloomKey else None)
   }
 
-  /** Sidecar JSON for a just-written unit: from the in-task stats when
-    * available, else the round-5 relational pass over the written files. */
-  private def writeUnitSidecars(uw: UnitWrite, unitDir: String,
-                                lineageId: String): Seq[java.nio.file.Path] =
-    if (uw.entries.isEmpty) Seq.empty
-    else uw.byFile match {
-      case Some(bf) => writeSidecarJson(lineageId, bf, uw.bloomCol)
-      case None => writeSidecars(unitDir, lineageId, uw.entries, uw.schema)
+  /** Manifest entries for the non-empty files a direct write reported
+    * (range partitioning can leave empty partitions; the empty-input
+    * fallback file holds no rows either), paired with their stats. */
+  private def fileEntries(unitDir: String,
+                          res: Seq[(String, Long, UnitFileStats)],
+                          lineageId: String, wallMs: Long, kind: String)
+      : Seq[(FileEntry, UnitFileStats)] = {
+    val dirPath = new org.apache.hadoop.fs.Path(unitDir)
+    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    res.filter(_._2 > 0).map { case (name, rows, s) =>
+      (FileEntry(
+        fs.makeQualified(new org.apache.hadoop.fs.Path(dirPath, name)).toString,
+        rows, s.minZ, s.maxZ, s.minLat, s.maxLat, s.minLon, s.maxLon,
+        lineageId, wallMs, kind), s)
     }
+  }
 
   /** Appends COMMUTE: the unit's data files and sidecars are already on
     * disk under unique names and the manifest merge is purely additive, so
@@ -556,8 +400,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
   }
 
-  /** ONE stats pass over the unit just written → three driver-written JSON
-    * sidecars (hist / bloom / index), via [[UnitStatsAgg]] grouped by file:
+  /** The unit's three driver-written JSON sidecars, assembled from the
+    * in-task stats:
     *
     *  - `meta/hist/<lineage>-<uuid>.json` — the unit's per-cell histogram
     *    at `histRes` ([[hotCells]]'s write-time skew hint);
@@ -574,114 +418,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * repeated lineage id leaves orphan sidecars, which only OVERCOUNT the
     * histogram hint (safe direction) and are never consulted by
     * path-keyed readers (lookups/index key by manifest paths). */
-  private def writeSidecars(unitDir: String, lineageId: String,
-                            entries: Seq[FileEntry],
-                            schema: org.apache.spark.sql.types.StructType): Seq[java.nio.file.Path] = {
-    if (entries.isEmpty) return Seq.empty
-    import spark.implicits._
-    val tSc = System.nanoTime()
-    // the writer's schema is passed in — inferring it would cost a
-    // footer-sampling Spark job per append; the read targets the ENTRIES'
-    // paths, not the dir listing, so an orphan partial file from a failed
-    // direct-write attempt can never leak into the stats
-    val raw = spark.read.schema(schema).parquet(entries.map(_.path): _*)
-    val key = bloomKey.filter(raw.columns.contains)
-    val byFile: Seq[(String, FileStats)] = key match {
-      case Some(kc) if entries.map(_.rows).sum <= SnapshotStore.BloomCollectRowsCutoff =>
-        // Small-unit Bloom path (micro-batch commits, bench-scale units):
-        // ONE relational pass — the per-(file, cell) leaf aggregate also
-        // collects the group's key hashes, and the driver folds them into
-        // per-file bitsets (bounded: ≤ cutoff × 8 B of hashes total). The
-        // cell is NULLed for NaN/null coords so those rows' hashes still
-        // reach the filter (dropping one would be a false negative) while
-        // their group is excluded from the leaf stats, exactly the typed
-        // aggregator's semantics.
-        val bits = Bloom.bitsFor(entries.map(_.rows).max)
-        val cellOrNull = when(col("lat").isNull || col("lon").isNull ||
-            isnan(col("lat")) || isnan(col("lon")), lit(null))
-          .otherwise(coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)))
-        val grouped = raw.select(
-            input_file_name().as("f"), cellOrNull.as("cell"),
-            col("lat"), col("lon"), xxhash64(col(kc)).as("h"))
-          .groupBy(col("f"), col("cell"))
-          .agg(count(lit(1)).as("cnt"),
-            min(col("lat")).as("la0"), max(col("lat")).as("la1"),
-            min(col("lon")).as("lo0"), max(col("lon")).as("lo1"),
-            collect_list(col("h")).as("hs"))
-          .collect()
-        grouped.groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
-          .view.mapValues { rows =>
-            val bs = new Array[Long](bits / 64)
-            rows.foreach(_.getSeq[Long](7).foreach(Bloom.add(bs, _)))
-            FileStats(bs,
-              rows.filter(!_.isNullAt(1))
-                .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
-                  r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-                .sortBy(_._1))
-          }
-          .toSeq.sortBy(_._1)
-      case Some(_) =>
-        // Large-unit Bloom path: the per-file bitsets need a distributed
-        // bitwise-OR aggregation whose buffers (512 KB bitsets, never row
-        // keys) cross the exchange — [[UnitStatsAgg]] is the scale-right
-        // shape for that and stays.
-        val bits = Bloom.bitsFor(entries.map(_.rows).max)
-        val agg = new UnitStatsAgg(bits)
-        // nulls → NaN: the typed encoder would throw on a null primitive,
-        // and the aggregator must still Bloom the row's key (skipping it
-        // would be a false negative); NaN coords excluded from cell stats
-        val latN = coalesce(col("lat"), lit(Double.NaN))
-        val lonN = coalesce(col("lon"), lit(Double.NaN))
-        raw.select(
-            input_file_name().as("f"),
-            coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)).as("cell"),
-            latN.as("lat"), lonN.as("lon"),
-            xxhash64(col(key.get)).as("h"))
-          .as[(String, Long, Double, Double, Long)]
-          .groupByKey(_._1)
-          .mapValues(t => (t._2, t._3, t._4, t._5))
-          .agg(agg.toColumn.name("stats"))
-          .collect()
-          .sortBy(_._1)
-          .map { case (f, fs) => (SnapshotStore.normalizePath(f), fs) }.toSeq
-      case None =>
-        // No Bloom key (the common case): the stats are a plain per-(file,
-        // cell) count + min/max — a relational hash aggregate with
-        // map-side partial aggregation and whole-stage codegen, ~2× the
-        // typed groupByKey kernel's speed (every row previously crossed
-        // the Dataset encoder). NaN/null coords are excluded from leaf
-        // stats exactly as the typed path excluded them.
-        val grouped = raw.select(
-            input_file_name().as("f"),
-            coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)).as("cell"),
-            col("lat"), col("lon"))
-          .filter(col("lat").isNotNull && col("lon").isNotNull &&
-            !isnan(col("lat")) && !isnan(col("lon")))
-          .groupBy(col("f"), col("cell"))
-          .agg(count(lit(1)).as("cnt"),
-            min(col("lat")).as("la0"), max(col("lat")).as("la1"),
-            min(col("lon")).as("lo0"), max(col("lon")).as("lo1"))
-          .collect()
-        grouped.groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
-          .view.mapValues { rows =>
-            FileStats(Array.emptyLongArray,
-              rows.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
-                r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-                .sortBy(_._1))
-          }
-          .toSeq.sortBy(_._1)
-    }
-    SnapshotStore.trace("sidecars.stats", tSc)
-    writeSidecarJson(lineageId, byFile, key)
-  }
-
-  /** Driver-side sidecar JSON from assembled per-file stats (shared by
-    * the relational pass above and the in-task [[UnitTaskStats]] path —
-    * same documents either way). */
-  private def writeSidecarJson(lineageId: String,
-                               byFile: Seq[(String, FileStats)],
-                               bloomCol: Option[String])
+  private def writeSidecarJson(uw: UnitWrite, lineageId: String)
       : Seq[java.nio.file.Path] = {
+    if (uw.entries.isEmpty) return Seq.empty
     val tJson = System.nanoTime()
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
@@ -692,14 +431,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       written += p
     }
     val cellTotals = scala.collection.mutable.HashMap.empty[Long, Long]
-    byFile.foreach { case (_, fs) => fs.leaves.foreach { l =>
+    uw.byFile.foreach { case (_, fs) => fs.leaves.foreach { l =>
       cellTotals.update(l._1, cellTotals.getOrElse(l._1, 0L) + l._2) } }
     put(histDir, MetaJson.histJson(cellTotals.toSeq.sortBy(_._1)))
     put(indexDir, MetaJson.indexJson(histRes,
-      byFile.map { case (f, fs) => (f, fs.leaves.toSeq) }))
-    bloomCol.foreach { kc =>
+      uw.byFile.map { case (f, fs) => (f, fs.leaves.toSeq) }))
+    uw.bloomCol.foreach { kc =>
       put(bloomDir, MetaJson.bloomJson(kc, Bloom.K,
-        byFile.map { case (f, fs) => (f, fs.bits) }))
+        uw.byFile.map { case (f, fs) => (f, fs.bits) }))
     }
     SnapshotStore.trace("sidecars.json", tJson)
     written.toSeq
@@ -771,7 +510,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def statsRes: Int = histRes
 
   /** Persisted per-file index summaries (leaf slabs keyed by normalized
-    * file path) — written by [[writeSidecars]], consumed by
+    * file path) — written by [[writeSidecarJson]], consumed by
     * [[graft.index.GlobalIndex.fromStore]] with zero Spark jobs. Orphan
     * sidecars from crashed appends are harmless: consumers key by the
     * manifest's file paths, which never reference them. */
@@ -933,11 +672,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val rootPath = metaDir.resolve(s"snap-$next")
     val (pShards, pInline) =
       if (replaceParent || parent == 0) (Seq.empty[ShardMeta], Seq.empty[FileEntry])
-      else {
-        val p = metaDir.resolve(s"snap-$parent")
-        if (Files.isRegularFile(p)) MetaJson.parseManifestRoot(Files.readString(p))
-        else (Seq.empty[ShardMeta], legacyManifest(p.toString))
-      }
+      else readRoot(parent)
     val newData = stamped.filter(isData)
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
@@ -953,7 +688,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
-            lineages = Some(g.map(_.lineageId).distinct)), g)
+            g.map(_.lineageId).distinct), g)
         }.toSeq
     try {
       if (pShards.isEmpty) {
@@ -1083,14 +818,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def anyDataPath(snapshotId: Long): Option[String] = {
     def firstData(es: Seq[FileEntry]): Option[String] =
       es.find(e => e.kind == "data" && e.path.nonEmpty).map(_.path)
-    val p = metaDir.resolve(s"snap-$snapshotId")
-    if (!Files.exists(p)) None
-    else if (Files.isRegularFile(p)) {
-      val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-      firstData(inline).orElse(shards.headOption.flatMap(sm =>
-        firstData(MetaJson.parseManifest(
-          Files.readString(metaDir.resolve(sm.path))))))
-    } else firstData(legacyManifest(p.toString))
+    val (shards, inline) = readRoot(snapshotId)
+    firstData(inline).orElse(shards.headOption.flatMap(sm =>
+      firstData(MetaJson.parseManifest(
+        Files.readString(metaDir.resolve(sm.path))))))
   }
 
   private def sweepOrphans(): Unit = {
@@ -1316,12 +1047,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         .map(_.name).toSeq
     require(keys.nonEmpty, "equality delete needs at least one non-binary key column")
     val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
-    val written = org.apache.spark.sql.GraftParquetDirect.write(
+    // tombstones carry no clustering key and are never pruned: every
+    // ordinal is missing, so the entry records minZ = maxZ = 0 and the
+    // fail-open lat/lon range whatever the key columns are
+    val res = org.apache.spark.sql.GraftParquetDirect.writeStats(
       df.filter(cond).select(keys.map(col): _*).coalesce(1),
-      unitDir)
+      unitDir, UnitTaskStats.observer(-1, -1, -1, -1, histRes))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    commit(footerStats(unitDir, lineageId, wallMs, withZ = false, kind = "delete",
-      only = Some(written.map(_._1).toSet)))
+    commit(fileEntries(unitDir, res, lineageId, wallMs, "delete").map(_._1))
   }
 
   /** Compaction — the distributed analog of the reference's forced-
@@ -1360,7 +1093,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       keyed
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
-      unitDir, lineage, t0, parts)
+      unitDir, lineage, t0)
     val stats = uw.entries
     // replacing commit: new manifest = compacted entries + the BASE
     // manifest's lineage ids as zero-file markers so resumableRun still
@@ -1384,7 +1117,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // append's freshly written histogram (its unit is not in `base`) must
     // survive or its hot cells vanish from the hint.
     val folded = lineageMarkers.map(_.lineageId).toSet + lineage
-    val fresh = writeUnitSidecars(uw, unitDir, lineage).toSet
+    val fresh = writeSidecarJson(uw, lineage).toSet
     Seq(histDir, bloomDir, indexDir).foreach { dir =>
       if (Files.exists(dir))
         listDir(dir).filterNot(fresh.contains).foreach { d =>
@@ -1457,14 +1190,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       // of expireSnapshots; their dirs become reclaimable here
       .filter(k => Files.exists(metaDir.resolve(s"snap-$k")))
       .flatMap { k =>
-        val p = metaDir.resolve(s"snap-$k")
-        if (Files.isRegularFile(p)) {
-          val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-          inline.filter(_.path.nonEmpty).map(dirOf) ++
-            shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
-              MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path)))
-                .filter(_.path.nonEmpty).map(dirOf)))
-        } else manifest(k).filter(_.path.nonEmpty).map(dirOf) // legacy dir
+        val (shards, inline) = readRoot(k)
+        inline.filter(_.path.nonEmpty).map(dirOf) ++
+          shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
+            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path)))
+              .filter(_.path.nonEmpty).map(dirOf)))
       }
       .toSet
     val dirs = listDir(Paths.get(root, "data"))
@@ -1539,10 +1269,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
 object SnapshotStore {
 
-  /** The clustering curves this store can write and read — the ONE list
-    * both the constructor's layout require and [[pinLegacyLayout]]'s
-    * pre-write validation check against (a drift between the two
-    * re-opens the bricked-legacy-table hazard). */
+  /** The clustering curves this store can write and read. */
   val ValidCurves: Set[String] = Set("z", "hilbert", "str")
 
   /** Data entries per manifest shard / the flat-manifest ceiling: at the
@@ -1565,13 +1292,6 @@ object SnapshotStore {
     * value is validated against meta/table.json like every layout field. */
   val DefaultHistRes: Int = 6
 
-  /** Unit-size ceiling (total rows) for the single-pass relational Bloom
-    * build in [[SnapshotStore.writeSidecars]]: under it, collecting the
-    * raw key hashes to the driver (≤ 16 MB at the cutoff) beats a typed
-    * bitset aggregation per measured append; over it, the distributed
-    * [[UnitStatsAgg]] bitwise-OR keeps driver traffic at 512 KB/file. */
-  val BloomCollectRowsCutoff: Long = 1L << 21
-
   /** Opt-in phase tracing for the write path (guide §1 instrumentation):
     * SPARK_GRAFT_TRACE=1 prints per-phase wall times to stderr. Zero cost
     * when off. */
@@ -1587,30 +1307,4 @@ object SnapshotStore {
   def normalizePath(p: String): String =
     if (p.startsWith("file:")) "/" + p.stripPrefix("file:").dropWhile(_ == '/')
     else p
-
-  /** Explicit migration for a pre-pin legacy table (committed snapshots,
-    * no meta/table.json): the OWNER asserts the layout the data was
-    * written with, and only then does the table open again. This is the
-    * only path that pins a layout onto existing data — the constructor
-    * refuses to, because auto-pinning the opener's possibly-wrong curve
-    * would make the correct spelling fail validation forever while reads
-    * silently drop rows. Refuses to overwrite an existing pin. */
-  def pinLegacyLayout(root: String, curve: String, zRes: Int = 12,
-                      histRes: Int = SnapshotStore.DefaultHistRes): Unit = {
-    // validate BEFORE writing: pinning a typo'd curve would brick the
-    // table (every open fails layout validation, and this method refuses
-    // to overwrite) with no API-level recovery path
-    require(ValidCurves(curve),
-      s"unknown curve '$curve' (expected ${ValidCurves.mkString(" | ")}); " +
-        "refusing to pin a layout no reader can open")
-    val metaPath = Paths.get(root, "meta", "table.json")
-    require(!Files.exists(metaPath),
-      s"table at $root already has a pinned layout; refusing to overwrite")
-    require(Files.exists(Paths.get(root, "meta", "current")),
-      s"table at $root has no committed snapshots; just open it normally " +
-        "and the first commit will pin the layout")
-    Files.createDirectories(metaPath.getParent)
-    Files.writeString(metaPath, MetaJson.tableMetaJson(curve, zRes, histRes),
-      StandardOpenOption.CREATE_NEW)
-  }
 }

@@ -27,18 +27,19 @@ import scala.reflect.ClassTag
   * write uniquely-named immutable files directly and commit via metadata.
   *
   * So: run the clustered plan as a plain RDD job; each non-empty partition
-  * opens ONE parquet file under a unique, attempt-qualified name via
-  * Spark's own `ParquetWriteSupport` (same bits, same encodings, same
-  * column statistics as the built-in writer — this is the identical
-  * `WriteSupport` class `ParquetFileFormat.prepareWrite` installs) and the
-  * driver gets back the (name, rows) of every SUCCESSFUL task's file. A
-  * failed or speculatively re-run attempt may orphan a partial file in the
-  * unit dir; callers pass the returned names to `footerStats(only = …)` so
-  * such orphans never reach the manifest, and readers never list dirs.
+  * writes parquet files under unique, attempt-qualified names via Spark's
+  * own `ParquetWriteSupport` (same bits, same encodings, same column
+  * statistics as the built-in writer — this is the identical
+  * `WriteSupport` class `ParquetFileFormat.prepareWrite` installs),
+  * rolling to a new file every [[MaxFileRows]] rows, and the driver gets
+  * back the (name, rows) of every SUCCESSFUL task's files. Callers use
+  * exactly that list — manifest entries and staging re-reads alike — so
+  * a partial file from a failed or speculative attempt never reaches a
+  * reader.
   *
   * [[writeStats]] additionally threads every row through a caller-supplied
-  * per-task observer while it is being written — the write task sees each
-  * row anyway, so unit-level statistics (per-cell slabs, Bloom hashes,
+  * per-file observer while it is being written — the write task sees each
+  * row anyway, so per-file statistics (per-cell slabs, Bloom bitsets,
   * file min/max) cost no second pass over the data
   * ([[graft.table.UnitTaskStats]]).
   *
@@ -48,22 +49,32 @@ import scala.reflect.ClassTag
   */
 object GraftParquetDirect {
 
-  /** Write `df` as one parquet file per non-empty partition into `dir`
-    * (created; must not already exist — `SaveMode.ErrorIfExists`
-    * semantics, unless `overwrite`, which deletes an existing target
-    * first like `SaveMode.Overwrite`). Returns the written
-    * (fileName, rowCount) pairs in partition order; writes one empty
-    * schema-bearing file when every partition is empty, like the
-    * built-in writer, so the dir stays readable. */
+  /** Rows per written file: past `MaxBits / BitsPerKey` a file's Bloom
+    * bitset is capped anyway, so rolling here bounds what one task holds
+    * for its observer (≤ 27 MB of key hashes) without loosening any
+    * filter. A constant, not a knob. */
+  val MaxFileRows: Long =
+    graft.table.Bloom.MaxBits.toLong / graft.table.Bloom.BitsPerKey
+
+  /** Write `df` as parquet files into `dir` — one per non-empty
+    * partition, more past [[MaxFileRows]] rows. `dir` is created and must
+    * not already exist (`SaveMode.ErrorIfExists` semantics) unless
+    * `overwrite`, which deletes an existing target first like
+    * `SaveMode.Overwrite`. Returns the written (fileName, rowCount) pairs
+    * in partition order — the ONLY files a consumer may read, so re-reads
+    * go through this list, never a listing of `dir`. A failed job leaves
+    * no `part-*` file in `dir`. Writes one empty schema-bearing file when
+    * every partition is empty, like the built-in writer, so the dir stays
+    * readable. */
   def write(df: Dataset[Row], dir: String,
             overwrite: Boolean = false): Seq[(String, Long)] =
     writeStats[Null](df, dir,
       () => ((_: InternalRow) => (), () => null), overwrite)
       .map(r => (r._1, r._2))
 
-  /** [[write]], with a per-task row observer: `observer()` is invoked once
+  /** [[write]], with a per-file row observer: `observer()` is invoked once
     * per written file (inside the task), its first function sees every row
-    * in write order, and its second produces the task's summary, returned
+    * in write order, and its second produces the file's summary, returned
     * with the (fileName, rowCount) pair. The observer closure and `S` must
     * be serializable. */
   def writeStats[S](df: Dataset[Row], dir: String,
@@ -109,19 +120,27 @@ object GraftParquetDirect {
       if (codec == "UNCOMPRESSED") ".parquet"
       else "." + codec.toLowerCase + ".parquet"
     val rdd = df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
-    implicit val ct: ClassTag[Option[(String, Long, S)]] =
-      ClassTag(classOf[Option[_]]).asInstanceOf[ClassTag[Option[(String, Long, S)]]]
+    implicit val ct: ClassTag[Seq[(String, Long, S)]] =
+      ClassTag(classOf[Seq[_]]).asInstanceOf[ClassTag[Seq[(String, Long, S)]]]
     val written: Seq[(String, Long, S)] =
-      if (rdd.getNumPartitions == 0) Seq.empty
-      else spark.sparkContext
-        .runJob(rdd, (tc: TaskContext, it: Iterator[InternalRow]) =>
-          writeOne(ser, dir, uuid, ext, tc.partitionId(), tc.taskAttemptId(),
-            it, force = false, observer))
-        .flatten.toSeq
+      try {
+        if (rdd.getNumPartitions == 0) Seq.empty
+        else spark.sparkContext
+          .runJob(rdd, (tc: TaskContext, it: Iterator[InternalRow]) =>
+            writeOne(ser, dir, uuid, ext, tc.partitionId(), tc.taskAttemptId(),
+              it, force = false, observer))
+          .flatten.toSeq
+      } catch {
+        case e: Throwable =>
+          // a failed task's writer still seals a readable footer: leave no
+          // such partial file behind for a directory reader to pick up
+          dropUnreported(fs, fsPath, Set.empty)
+          throw e
+      }
     val out =
       if (written.nonEmpty) written
       else writeOne(ser, dir, uuid, ext, 0, 0L,
-        Iterator.empty, force = true, observer).toSeq
+        Iterator.empty, force = true, observer)
     dropUnreported(fs, fsPath, out.map(_._1).toSet)
     out
   }
@@ -129,11 +148,12 @@ object GraftParquetDirect {
   /** Delete `part-*` files a failed or zombie task attempt left behind —
     * only the files reported by SUCCESSFUL tasks survive, restoring the
     * builtin committer's "only committed files are visible" property for
-    * consumers that read the directory (staging re-reads, the DuckDB
-    * oracle's glob). A speculative attempt still running at cleanup time
-    * writes under its own task-attempt-unique name and can at worst
-    * re-orphan a file afterwards; manifest-keyed readers never see it,
-    * and the unit's own stats/reads go through the reported list. */
+    * directory readers (the DuckDB oracle's glob of a staging dir). A
+    * speculative attempt still running at cleanup time writes under its
+    * own task-attempt-unique name and can at worst re-orphan a file
+    * afterwards, which is why every in-engine consumer — manifest
+    * entries and staging re-reads alike — reads the reported list, never
+    * the directory. */
   private def dropUnreported(fs: org.apache.hadoop.fs.FileSystem,
                              dir: Path, reported: Set[String]): Unit =
     fs.listStatus(dir)
@@ -141,39 +161,46 @@ object GraftParquetDirect {
         !reported.contains(f.getPath.getName))
       .foreach(f => fs.delete(f.getPath, false))
 
-  /** One task's (or the driver's empty-fallback) file. The APP-UNIQUE
-    * `TaskContext.taskAttemptId` is part of the name — unlike
-    * `attemptNumber`, it does not restart at 0 when a stage is
-    * resubmitted, so a re-run attempt (or a zombie from a previous stage
-    * attempt) can never collide with — or half-overwrite — another
-    * attempt's file. */
+  /** One task's (or the driver's empty-fallback) files: a new file, with
+    * a fresh observer, every [[MaxFileRows]] rows (`-cNNN` counts them, as
+    * in Spark's own writer). The APP-UNIQUE `TaskContext.taskAttemptId`
+    * is part of the name — unlike `attemptNumber`, it does not restart at
+    * 0 when a stage is resubmitted, so a re-run attempt (or a zombie from
+    * a previous stage attempt) can never collide with — or half-overwrite
+    * — another attempt's file. */
   private def writeOne[S](ser: SerializableConfiguration, dir: String,
                           uuid: String, ext: String, pid: Int, attempt: Long,
                           it: Iterator[InternalRow], force: Boolean,
                           observer: () => (InternalRow => Unit, () => S))
-      : Option[(String, Long, S)] = {
-    if (!force && !it.hasNext) return None
-    val name = f"part-$pid%05d-$uuid-t$attempt$ext"
-    val out = new Path(dir, name)
+      : Seq[(String, Long, S)] = {
+    if (!force && !it.hasNext) return Seq.empty
     val tac = new TaskAttemptContextImpl(ser.value,
       new TaskAttemptID(new TaskID(new JobID(uuid, 0), TaskType.MAP, pid),
         (attempt % Int.MaxValue).toInt))
-    val fmt = new ParquetOutputFormat[InternalRow]() {
-      override def getDefaultWorkFile(
-          c: org.apache.hadoop.mapreduce.TaskAttemptContext,
-          e: String): Path = out
-    }
-    val (obs, fin) = observer()
-    val w = fmt.getRecordWriter(tac)
-    var rows = 0L
-    try {
-      while (it.hasNext) {
-        val r = it.next()
-        obs(r)
-        w.write(null, r)
-        rows += 1
+    val files = Seq.newBuilder[(String, Long, S)]
+    var k = 0
+    do {
+      val name = f"part-$pid%05d-$uuid-t$attempt-c$k%03d$ext"
+      val out = new Path(dir, name)
+      val fmt = new ParquetOutputFormat[InternalRow]() {
+        override def getDefaultWorkFile(
+            c: org.apache.hadoop.mapreduce.TaskAttemptContext,
+            e: String): Path = out
       }
-    } finally w.close(tac)
-    Some((name, rows, fin()))
+      val (obs, fin) = observer()
+      val w = fmt.getRecordWriter(tac)
+      var rows = 0L
+      try {
+        while (rows < MaxFileRows && it.hasNext) {
+          val r = it.next()
+          obs(r)
+          w.write(null, r)
+          rows += 1
+        }
+      } finally w.close(tac)
+      files += ((name, rows, fin()))
+      k += 1
+    } while (it.hasNext)
+    files.result()
   }
 }

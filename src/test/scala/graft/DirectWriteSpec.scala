@@ -89,6 +89,42 @@ class DirectWriteSpec extends AnyFunSuite {
     graft.ops.OpUtil.deleteTree(base)
   }
 
+  test("a job that fails partway leaves no part file in the target") {
+    val base = tmp()
+    // one partition, so the failing task is the job's only task and its
+    // writer has sealed a readable partial footer before the job fails
+    val failing = spark.range(0, 1000, 1, 1).toDF("id")
+      .map(r => { val i = r.getLong(0); if (i == 500L) sys.error("planted"); i })
+      .toDF("id")
+    intercept[Exception] { GraftParquetDirect.write(failing, s"$base/f") }
+    val left = Option(new java.io.File(s"$base/f").list()).toSeq.flatten
+      .filter(_.startsWith("part-"))
+    assert(left.isEmpty, s"partial files left behind: $left")
+    graft.ops.OpUtil.deleteTree(base)
+  }
+
+  test("rolls to a new file past MaxFileRows rows; one observer per file") {
+    val base = tmp()
+    val cap = graft.table.Bloom.MaxBits / graft.table.Bloom.BitsPerKey
+    assert(GraftParquetDirect.MaxFileRows == cap)
+    val n = cap + 1L
+    val observers = spark.sparkContext.longAccumulator("observers")
+    val written = GraftParquetDirect.writeStats(
+      spark.range(0, n, 1, 1).toDF("id"), s"$base/r",
+      () => {
+        observers.add(1)
+        var seen = 0L
+        ((_: org.apache.spark.sql.catalyst.InternalRow) => seen += 1, () => seen)
+      })
+    assert(written.size == 2)
+    assert(written.map(_._2).sum == n)
+    assert(written.forall(w => w._2 <= cap && w._3 == w._2))
+    assert(observers.value == 2L)
+    val back = spark.read.parquet(written.map(w => s"$base/r/${w._1}"): _*)
+    assert(back.count() == n)
+    graft.ops.OpUtil.deleteTree(base)
+  }
+
   test("overwrite replaces the previous target completely") {
     val base = tmp()
     val df1 = Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v").repartition(2)

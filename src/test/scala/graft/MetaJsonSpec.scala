@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The driver-side JSON codec behind manifests and sidecars must
   * round-trip EVERY value bit-exactly — a lossy double or a mangled path
   * string would corrupt pruning bounds or orphan data files silently.
-  * (NaN/Infinity never reach these files by contract: footer stats fail
+  * (NaN/Infinity never reach these files by contract: file stats fail
   * open to ±Double.MaxValue instead.) */
 class MetaJsonSpec extends AnyFunSuite {
 
@@ -83,8 +83,7 @@ class MetaJsonSpec extends AnyFunSuite {
 
   test("manifest JSON is additively evolvable: old manifests missing new fields parse with safe defaults") {
     // round-4 ADVICE: a manifest written BEFORE a FileEntry field existed
-    // must still parse after the field is added — same contract the legacy
-    // parquet path gives kind/seq. Geometric stats default to the
+    // must still parse after the field is added. Geometric stats default to the
     // fail-open full range (a pruner may only skip a file it can PROVE
     // disjoint; unknown stats must never skip).
     val minimal =
@@ -102,20 +101,22 @@ class MetaJsonSpec extends AnyFunSuite {
     assert(f.kind == "delete" && f.seq == 9L)
   }
 
-  test("manifest-list shard rows round-trip lineage summaries; absent summaries stay UNKNOWN, not empty") {
+  test("manifest-list shard rows round-trip lineage summaries; a row without one is refused") {
     import graft.table.ShardMeta
-    val withLin = ShardMeta("snap-3-shard-0-ab.json", 7, -5L, 9L,
-      -10.0, 20.0, -30.0, 40.0, lineages = Some(Seq("u-0", "del-0")))
-    val noLin = ShardMeta("snap-3-shard-1-ab.json", 2, 10L, 99L,
-      21.0, 50.0, 41.0, 80.0, lineages = None)
-    val json = MetaJson.manifestListJson(Seq(withLin, noLin), Seq.empty)
-    val (back, _) = MetaJson.parseManifestRoot(json)
-    assert(back == Seq(withLin, noLin))
-    // the distinction matters downstream: Some(xs) is authoritative
-    // (committedLineage reads the root alone), None forces a full parse —
-    // a default-to-empty would silently claim "no lineages here" and
-    // re-append committed streaming units as duplicates
-    assert(back.head.lineages.contains(Seq("u-0", "del-0")))
-    assert(back(1).lineages.isEmpty)
+    val a = ShardMeta("snap-3-shard-0-ab.json", 7, -5L, 9L,
+      -10.0, 20.0, -30.0, 40.0, lineages = Seq("u-0", "del-0"))
+    val b = ShardMeta("snap-3-shard-1-ab.json", 2, 10L, 99L,
+      21.0, 50.0, 41.0, 80.0, lineages = Seq.empty)
+    val (back, _) = MetaJson.parseManifestRoot(
+      MetaJson.manifestListJson(Seq(a, b), Seq.empty))
+    assert(back == Seq(a, b))
+    // a row with no summary cannot say which units it holds: defaulting
+    // it to empty would let committedLineage re-append committed
+    // streaming units as duplicates, so the parser refuses it
+    val summaryLess =
+      """{"shards":[{"path":"snap-3-shard-0-ab.json","entries":7}],"entries":[]}"""
+    val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(summaryLess))
+    assert(e.getMessage.contains("snap-3-shard-0-ab.json") &&
+      e.getMessage.contains("no `lineages` summary"), e.getMessage)
   }
 }

@@ -208,6 +208,20 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(graft.index.GlobalIndex.fromStore(st).totalRows == 1)
   }
 
+  test("append rejects non-Double coordinates and a non-Long Bloom key by name") {
+    import spark.implicits._
+    val st = new SnapshotStore(spark, tmp(), bloomKey = Some("id"))
+    val e1 = intercept[IllegalArgumentException] {
+      st.append(Seq((1L, 12.0f, 40.0)).toDF("id", "lat", "lon"), "u-f")
+    }
+    assert(e1.getMessage.contains("'lat' is float") && e1.getMessage.contains("double"))
+    val e2 = intercept[IllegalArgumentException] {
+      st.append(Seq(("a", 12.0, 40.0)).toDF("id", "lat", "lon"), "u-s")
+    }
+    assert(e2.getMessage.contains("'id' is string") && e2.getMessage.contains("bigint"))
+    assert(st.currentSnapshotId == 0L)
+  }
+
   test("orphaned snap dir + stale tmp from a crashed commit do not wedge the table") {
     val root = tmp()
     val st = new SnapshotStore(spark, root)
@@ -235,27 +249,24 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(root, "meta", "current.tmp.2")))
   }
 
-  test("legacy parquet-dataset manifests (incl. pre-`kind` schema) still read") {
-    // snapshots written by the old format were parquet DATASETS under the
-    // snap-N path (and the oldest lacked the kind/seq columns) — the JSON
-    // manifest reader must fall back to the legacy decoder with additive
-    // schema evolution, not AnalysisException
+  test("retired parquet-dataset manifest: every read refuses with one clear error") {
+    // snapshots of the retired format were parquet DATASETS under the
+    // snap-N path; the reader no longer decodes them and must say so
+    // instead of failing somewhere inside a JSON parse
     val root = tmp()
     val st = new SnapshotStore(spark, root)
     st.append(pts.limit(100), "u-0", numPartitions = 2)
-    val entries = st.manifest()
     val snapPath = java.nio.file.Paths.get(root, "meta", "snap-1")
-    Files.delete(snapPath) // replace the JSON file with a legacy parquet dir
-    import spark.implicits._
-    spark.createDataset(entries).toDF().drop("kind", "seq")
-      .coalesce(1).write.parquet(snapPath.toString)
-    val st2 = new SnapshotStore(spark, root)
-    assert(st2.manifest().forall(_.kind == "data"))
-    assert(st2.read()._1.count() == 100)
-    assert(st2.totalRows == 100)
-    // a commit on top of the legacy snapshot carries its entries forward
-    st2.append(pts.limit(20), "u-1", numPartitions = 1)
-    assert(st2.read()._1.count() == 120)
+    Files.delete(snapPath)
+    Files.createDirectories(snapPath)
+    Files.writeString(snapPath.resolve("part-0.parquet"), "retired format")
+    for (op <- Seq[() => Any](() => st.manifest(), () => st.read(),
+        () => st.committedLineage, () => st.append(pts.limit(20), "u-1"),
+        () => st.vacuum(olderThanMs = 0L))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("is a directory") &&
+        e.getMessage.contains("retired parquet manifest format"), e.getMessage)
+    }
   }
 
   test("table meta pins curve + zRes: mismatched open fails fast") {
@@ -283,38 +294,21 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy table (snapshots, no table.json): open refuses; pinLegacyLayout migrates explicitly") {
-    // round-4 ADVICE: auto-pinning at the next commit would enshrine the
-    // OPENER's possibly-wrong curve as authoritative — after which the
-    // CORRECT spelling fails validation forever, and reads meanwhile
-    // silently drop rows. The constructor must refuse; only an explicit
-    // owner-asserted migration reopens the table.
+  test("table with snapshots but no table.json: every open refuses") {
+    // pinning at the next commit would enshrine the OPENER's possibly-
+    // wrong curve as authoritative — after which the CORRECT spelling
+    // fails validation forever, and reads meanwhile silently drop rows.
+    // Nothing on disk can prove which spelling is correct, so ANY open —
+    // even the correct one — refuses.
     val root = tmp()
     val st = new SnapshotStore(spark, root, curve = "hilbert")
     st.append(pts.limit(50), "u-0", numPartitions = 2)
     Files.delete(java.nio.file.Paths.get(root, "meta", "table.json"))
-    // ANY open — even the correct spelling — refuses: nothing on disk can
-    // prove which spelling is correct
-    val e = intercept[IllegalStateException] {
-      new SnapshotStore(spark, root, curve = "hilbert")
-    }
-    assert(e.getMessage.contains("pinLegacyLayout"))
-    intercept[IllegalStateException] { new SnapshotStore(spark, root) }
-    // a typo'd curve must be rejected BEFORE it is written: pinning it
-    // would brick the table (every spelling fails validation and the pin
-    // refuses overwrite) with no API recovery path
-    intercept[IllegalArgumentException] {
-      SnapshotStore.pinLegacyLayout(root, "hilbet")
-    }
-    // the owner asserts the WRITTEN layout; the table reopens and reads
-    SnapshotStore.pinLegacyLayout(root, "hilbert")
-    val ok = new SnapshotStore(spark, root, curve = "hilbert")
-    assert(ok.read()._1.count() == 50)
-    // the pin is now authoritative: wrong spellings fail the normal way
-    intercept[IllegalArgumentException] { new SnapshotStore(spark, root) }
-    // and the migration path refuses to overwrite an existing pin
-    intercept[IllegalArgumentException] {
-      SnapshotStore.pinLegacyLayout(root, "z")
+    for (open <- Seq(() => new SnapshotStore(spark, root, curve = "hilbert"),
+        () => new SnapshotStore(spark, root))) {
+      val e = intercept[IllegalStateException](open())
+      assert(e.getMessage.contains("no meta/table.json") &&
+        e.getMessage.contains("layout it was written with is unknown"), e.getMessage)
     }
   }
 
@@ -530,11 +524,12 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(st.read()._1.count() == pts.count())
   }
 
-  test("committedLineage from the root's shard summaries == full parse; pre-field roots fall back") {
+  test("committedLineage from the root's shard summaries == full parse; summary-less roots refused") {
     // the streaming-ingest idempotence check runs per MICRO-BATCH — on a
-    // summarized two-level root it must read KBs (root only), and on a
-    // root written before the lineages field existed it must WIDEN to the
-    // full parse (a missed lineage re-appends a committed unit)
+    // two-level root it must read KBs (root only); a root without the
+    // lineages summary cannot say which units it holds, and must be
+    // refused rather than read as "none" (a missed lineage re-appends a
+    // committed unit)
     val root = tmp()
     val st = new SnapshotStore(spark, root, manifestShardRows = 3)
     (0 until 3).foreach(u =>
@@ -543,19 +538,20 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val full = st.manifest().map(_.lineageId).toSet
     assert(Seq("u-0", "u-1", "u-2", "del-0").forall(full.contains))
     assert(st.committedLineage == full)
-    // rewrite the root with the summaries stripped (a pre-field root)
-    val metaP = java.nio.file.Paths.get(root, "meta")
-    val rootFile = metaP.resolve(s"snap-${st.currentSnapshotId}")
-    val (sh, inl) = graft.table.MetaJson.parseManifestRoot(
-      Files.readString(rootFile))
-    assert(sh.nonEmpty && sh.forall(_.lineages.isDefined))
-    Files.writeString(rootFile, graft.table.MetaJson.manifestListJson(
-      sh.map(_.copy(lineages = None)), inl))
-    assert(st.committedLineage == full,
-      "pre-field root: fallback full parse must recover every lineage")
-    // and resumableRun's skip contract holds on the summarized table
+    // resumableRun's skip contract holds on the summarized table
     val ran = st.resumableRun(Seq("u-0", "u-late")) { _ => pts.limit(5) }
     assert(ran == Seq("u-late"))
+    // strip the summaries from the root: the idempotence check refuses
+    val rootFile = java.nio.file.Paths.get(root, "meta", s"snap-${st.currentSnapshotId}")
+    val doc = Files.readString(rootFile)
+    assert(doc.contains("\"lineages\""))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val tree = mapper.readTree(doc)
+    tree.get("shards").forEach(r =>
+      r.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("lineages"))
+    Files.writeString(rootFile, mapper.writeValueAsString(tree))
+    val e = intercept[IllegalStateException](st.committedLineage)
+    assert(e.getMessage.contains("no `lineages` summary"), e.getMessage)
   }
 
   test("stored-table rangeBox (q09d path): files pruned at two scales, rows exact") {
@@ -686,6 +682,12 @@ class SnapshotStoreSpec extends AnyFunSuite {
     st.append(images, "img-0") // columns: image_id, bytes, w, h, fmt, caption, phash, lat, lon
     val victim = images.select("image_id").collect().map(_.getString(0)).sorted.head
     st.deleteWhere(col("image_id") === victim, "del-img") // old code threw here
+    // the tombstone's stats come from the same in-task observer as data
+    // files, with every ordinal missing: no clustering key, never pruned
+    val Seq(tomb) = st.manifest().filter(_.kind == "delete")
+    assert(tomb.rows == 1L && tomb.minZ == 0L && tomb.maxZ == 0L)
+    assert(tomb.minLat == -Double.MaxValue && tomb.maxLat == Double.MaxValue &&
+      tomb.minLon == -Double.MaxValue && tomb.maxLon == Double.MaxValue)
     val back = st.read()._1
     assert(back.count() == 23)
     assert(back.filter(col("image_id") === victim).count() == 0)
@@ -920,12 +922,11 @@ class SnapshotStoreSpec extends AnyFunSuite {
   }
 
   test("append job budget: clustered write + one stats pass; metadata reads cost zero jobs") {
-    // the round-4 commit-protocol claim, pinned: an append runs TWO Spark
-    // queries — the clustered write (range sampling + shuffle + write
-    // stage-jobs under AQE) and ONE sidecar stats pass (map + final
-    // stage-jobs) — totalling <= 8 stage-jobs, with the schema passed to
-    // the stats read (no footer-inference job); and manifest / lineage /
-    // hotCells / index reads are pure driver IO — ZERO Spark jobs
+    // the commit-protocol claim, pinned: an append runs the clustered
+    // write (range sampling + shuffle + write stage-jobs under AQE), whose
+    // tasks also produce every stat, within <= 8 stage-jobs; and manifest
+    // / lineage / hotCells / index reads are pure driver IO — ZERO Spark
+    // jobs
     def jobsOf(group: String)(body: => Unit): Int = {
       spark.sparkContext.setJobGroup(group, group)
       try body finally spark.sparkContext.clearJobGroup()

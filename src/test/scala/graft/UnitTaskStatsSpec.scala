@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-task unit stats (UnitTaskStats, computed inside the direct
-  * write's tasks) must be INDISTINGUISHABLE from the round-5 protocol
-  * they replace: the relational per-(file, cell) sidecar aggregate and
-  * the parquet-footer min/max read. This spec recomputes both with the
-  * original expressions over the files the store actually committed —
-  * including planted null coordinates, a NaN latitude and a null Bloom
-  * key — and compares documents bit-for-bit. */
+  * write's tasks) are the store's only stats producer, so they must
+  * equal what a relational recomputation over the committed files gives:
+  * the per-(file, cell) aggregate, per-file Bloom bitsets sized by each
+  * file's own row count, and exact min/max bounds. The spec recomputes
+  * each with SQL expressions — over planted null coordinates, a NaN
+  * latitude and a null Bloom key — and compares documents bit-for-bit. */
 class UnitTaskStatsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -74,6 +74,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     assert(gotHist == expHist)
 
     // 3. bloom: xxhash64 of EVERY row (null key → seed), folded per file
+    //    into a bitset sized by THAT file's row count
     val expHashes = raw.select(input_file_name().as("f"), xxhash64(col("id")).as("h"))
       .collect().groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
       .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
@@ -81,12 +82,28 @@ class UnitTaskStatsSpec extends AnyFunSuite {
       java.nio.file.Path.of(s"$base/store/meta/bloom")).iterator().next()
     val (kc, k, gotBits) = MetaJson.parseBloom(java.nio.file.Files.readString(bloomFile))
     assert(kc == "id" && k == Bloom.K)
-    val bits = Bloom.bitsFor(entries.map(_.rows).max)
+    val rowsOf = entries.map(e => SnapshotStore.normalizePath(e.path) -> e.rows).toMap
+    assert(expHashes.keySet == rowsOf.keySet && gotBits.map(_._1).toSet == rowsOf.keySet)
     for ((f, hs) <- expHashes) {
-      val exp = new Array[Long](bits / 64)
+      val exp = new Array[Long](Bloom.bitsFor(rowsOf(f)) / 64)
       hs.foreach(Bloom.add(exp, _))
       assert(gotBits.toMap.apply(f).toSeq == exp.toSeq, s"bloom bits differ for $f")
     }
+    // no false negative: every planted id comes back through the Bloom-
+    // planned lookup, and the file holding the null-key row passes the
+    // null probe (SQL `IN` never matches a null, so the row itself is
+    // checked at the filter, not through the refined rows)
+    val ids = (1L to 4000L) ++ Seq(9001L, 9002L)
+    val (hit, _, _) = store.lookupByKey(ids)
+    assert(hit.select("id").as[Long].collect().sorted.toSeq == ids)
+    val nullFile = raw.filter(col("id").isNull)
+      .select(input_file_name()).as[String].collect()
+      .map(SnapshotStore.normalizePath).toSeq
+    assert(nullFile.size == 1)
+    val (filters, probes, _) = store.lookupShardFilter(Seq(null), "id")
+    assert(probes.forall(Bloom.mightContain(filters(nullFile.head), _)))
+    val (_, keptForNull, _) = store.lookupByKey(Seq(null))
+    assert(keptForNull >= 1)
 
     // 4. manifest bounds: exact over non-null values; the NaN-lat file
     //    fails open on lat, everything else matches the SQL min/max
