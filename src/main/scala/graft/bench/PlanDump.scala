@@ -13,7 +13,7 @@ object PlanDump {
     sb ++= "The plans the scale story depends on, `.explain(\"formatted\")` output.\n"
     // each dump is best-effort: a missing fixture path must not discard
     // the sections already generated (the file is written at the end)
-    def dump(name: String, what: String, df: => org.apache.spark.sql.DataFrame): Unit =
+    def dump(name: String, what: String, df: => org.apache.spark.sql.Dataset[_]): Unit =
       try {
         val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
         sb ++= s"\n## $name\n\n$what\n\n```\n"
@@ -40,8 +40,9 @@ object PlanDump {
       SpatialOps.tileHistogram(pts))
     dump("knnSerial (TakeOrderedAndProject)", "Per-partition top-k + driver merge; no global sort.",
       pts.withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), 1.0, 2.0)).orderBy(col("d2"), col("id")).limit(25))
-    dump("knnJoinAgg", "Dense baseline as a per-partition primitive kernel: flat per-query bounded arrays reduce each partition to k candidates per query before the exchange — |Q|*k*partitions shuffled rows instead of |Q|*N — then one tiny window ranks the survivors exactly.",
-      SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(3), 5))
+    dump("knnJoinAgg (the kNN planner's kernel)", "Every kNN entry point runs graft.ops.Knn: per round, a candidate read feeds a per-partition primitive kernel whose flat per-query bounded arrays reduce each partition to k (id, lat, lon, d2) candidates per query; the partials (|Q|*k*partitions rows) are collected and merged on the driver. One job per round — no exchange, no window, no persist. knnJoinAgg's one round reads everything.",
+      graft.ops.Knn.firstRound(graft.ops.Knn.inMemory(pts), Fixtures.knnQueries.take(3), 5,
+        graft.ops.Knn.unbounded)._1)
     dump("rangeBox", "Covering prune is a 4-comparison rectangle in grid coords + the exact box predicate — one codegen'd Filter, box bounds pushed to the scan.",
       SpatialOps.rangeBox(pts, Fixtures.boxes.head._2))
     dump("boxJoinSalted (write-time hot cells)", "With precomputed hot cells the salted plan is scan → salt projection → broadcast join: ZERO stats scans on the query path.",
@@ -57,19 +58,12 @@ object PlanDump {
     store.append(pts, "unit-0", numPartitions = 8)
     dump("snapshot read(box) — __z pushdown", "Manifest prunes files driver-side; the COARSE half of the covering (a <=16-term disjunction over the MATERIALIZED __z sort key) lands in PushedFilters for parquet row-group min/max skipping, while the fine covering rides in graft_z_in_ranges — a codegen'd O(log n) binary-search probe (an n-term Or tree is O(n) per row; measured 4.1 s at 256 ranges over 600k cached rows vs 0.17 s for the probe at 2914).",
       store.read(Some(Fixtures.boxes.head._2))._1)
-    // knnStored collects its k rows from ONE scan (the returned frame is a
-    // local relation) — dump the scan it executes: the radius-bounded,
-    // manifest-pruned top-k
     try {
-      val (qla, qlo, k) = (Fixtures.knnPoint._1, Fixtures.knnPoint._2, Fixtures.knnK)
-      val gi = graft.index.GlobalIndex.fromStore(store)
-      val radius = gi.knnSeedRadius(qla, qlo, k)
-      val b = graft.geo.MBR(qla - radius, qlo - radius, qla + radius, qlo + radius)
+      val q = Seq((0, Fixtures.knnPoint._1, Fixtures.knnPoint._2))
       dump("stored-table kNN (persisted index summaries)",
-        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side sidecar read); the seed radius bounds a manifest-pruned box read (files outside it never open) with the __z disjunction in PushedFilters; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
-        store.read(Some(b))._1
-          .withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), qla, qlo))
-          .orderBy(col("d2"), col("id")).limit(k))
+        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side sidecar read); the seed radius bounds a manifest-pruned readBoxes read (files outside it never open) with the __z disjunction in PushedFilters; the planner's kernel runs over it in ONE job and its k rows are audited driver-side (knnStored's first round, as Knn.run executes it).",
+        graft.ops.Knn.firstRound(graft.ops.Knn.stored(store), q, Fixtures.knnK,
+          graft.ops.Knn.seeded(graft.index.GlobalIndex.fromStore(store), Fixtures.knnK))._1)
     } catch { case e: Throwable =>
       sb ++= s"\n## stored-table kNN\n\nSKIPPED: ${e.getMessage}\n" }
     store.deleteWhere(graft.geo.GeoCols.inBox(col("lat"), col("lon"), Fixtures.boxes.head._2), "del-0")
@@ -119,17 +113,12 @@ object PlanDump {
         s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); inside survivors the coarse pushable disjunction skips row groups and the fine merged covering (cap 4096) is the codegen'd graft_z_in_ranges binary-search probe. The unchanged boxJoin broadcast-hash-join refines exactly on top.",
         SpatialOps.boxJoin(jdf, Fixtures.boxes,
           SpatialOps.resolveRes(jstore, Fixtures.boxes.map(_._2))))
-      val gi2 = graft.index.GlobalIndex.fromStore(jstore)
-      val bounds = Fixtures.knnQueries.map { case (qid, qla, qlo) =>
-        (qid, qla, qlo, gi2.knnSeedRadius(qla, qlo, Fixtures.knnJoinK)) }
-      val balls = bounds.map { case (_, qla, qlo, rad) =>
-        graft.geo.MBR(qla - rad, qlo - rad, qla + rad, qlo + rad) }
-      val (cand, ckept, ctot) = jstore.readBoxes(balls)
-      dump("stored-table kNN JOIN (knnJoinStored candidate plan)",
-        s"Per-query radius bounds from the zero-rebuild fromStore index (no Spark jobs); ONE multi-ball pruned read opened $ckept of $ctot files; the tiny (q_id, center, radius) set broadcasts and the per-query top-k runs as a window over candidates only — |Q|·k output rows, audited per query before trust (the OPERATOR'S OWN candidate-plan builder, GlobalIndex.knnJoinCandidatePlan — this evidence cannot drift from the executed plan).",
-        graft.index.GlobalIndex.knnJoinCandidatePlan(cand, bounds,
-            Fixtures.knnJoinK)
-          .select(col("q_id"), col("rank"), col("id")))
+      val (kf, ckept, ctot) = graft.ops.Knn.firstRound(graft.ops.Knn.stored(jstore),
+        Fixtures.knnQueries, Fixtures.knnJoinK,
+        graft.ops.Knn.seeded(graft.index.GlobalIndex.fromStore(jstore), Fixtures.knnJoinK))
+      dump("stored-table kNN JOIN (knnJoinStored first round)",
+        s"Per-query radius bounds from the zero-rebuild fromStore index (no Spark jobs); ONE multi-box readBoxes read opened $ckept of $ctot files and feeds the planner's kernel directly — no broadcast join, no window, no exchange; the driver merges the partials and audits each query (knnJoinStored's first round, as Knn.run executes it).",
+        kf)
     } catch { case e: Throwable =>
       sb ++= s"\n## stored-table JOINs\n\nSKIPPED: ${e.getMessage}\n" }
     Files.writeString(Paths.get("/root/repo/docs/PLANS.md"), sb.toString)

@@ -1,8 +1,8 @@
 package graft.index
 
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import graft.ops.Knn
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The two-level distributed index (SURVEY.md §1.5): the *global* level is
@@ -137,184 +137,54 @@ object GlobalIndex {
   }
 
   /** Exact kNN over a STORED table, planned from the persisted index
-    * summaries: one driver-side radius bound ([[GlobalIndex.knnSeedRadius]]
-    * over [[fromStore]]'s zero-scan index) → a manifest-pruned box read
-    * (files wholly outside the radius never open — the file-level subtree
-    * prune, RStarTree.java:426) → exact top-k. The index build cost is
-    * amortized to WRITE time; the query pays only the pruned scan.
-    *
-    * Exactness audit: sidecar counts may overcount live rows under pending
-    * tombstones, so the bound is re-verified against the candidates
-    * (count ≥ k and kth distance ≤ radius²); a failed audit falls back to
-    * the full-table scan — superset-then-refine, never a wrong answer. */
+    * summaries: the [[Knn]] planner with [[GlobalIndex
+    * .knnSeedRadius]] over [[fromStore]]'s zero-scan index as the bound and
+    * `store.readBoxes` as the candidate read (files wholly outside the
+    * radius never open — the file-level subtree prune, RStarTree.java:426).
+    * The index build cost is amortized to WRITE time; the query pays only
+    * the pruned scan. Sidecar counts overcount live rows under pending
+    * tombstones, so the planner's audit re-verifies the bound and a failed
+    * query is answered by the unbounded read — never a wrong answer. */
   def knnStored(store: graft.table.SnapshotStore,
                 qLat: Double, qLon: Double, k: Int): DataFrame =
     knnStoredPruned(store, qLat, qLon, k)._1
 
-  /** [[knnStored]] + the observed (files read, total files) of the read
-    * that actually produced the result, so specs can assert file skipping
-    * on the query path (a fallback reports the full read's counts, never
-    * the pruned read it abandoned). */
+  /** [[knnStored]] + the (files read, total files) of the read that
+    * produced the result (a fallback reports the unbounded read's). */
   private[graft] def knnStoredPruned(store: graft.table.SnapshotStore,
                                      qLat: Double, qLon: Double,
                                      k: Int): (DataFrame, Int, Int) = {
-    val gi = fromStore(store)
-    val radius = gi.knnSeedRadius(qLat, qLon, k)
-    val (cand, kept, total) =
-      if (radius == Double.MaxValue) store.read()
-      else store.read(Some(MBR(qLat - radius, qLon - radius,
-        qLat + radius, qLon + radius)))
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val d2c = GeoCols.d2(col("lat"), col("lon"), qLat, qLon)
-    // ONE scan of the pruned files: collect the k candidate rows (k is
-    // small by contract) and audit them driver-side — re-running the
-    // top-k as a second job would double the query's cost
-    val topk = cand.withColumn("d2", d2c)
-      .orderBy(col("d2"), col("id")).limit(k)
-      .select(col("id"), col("lat"), col("lon"), col("d2"))
-      .as[(Long, Double, Double, Double)].collect()
-    // an unbounded radius means `cand` was the FULL table — the collected
-    // top-k is exact even with fewer than k live rows (the audit's
-    // topk.length >= k would otherwise reject an already-exact answer and
-    // pay the full scan a second time)
-    val sound = topk.nonEmpty && (radius == Double.MaxValue ||
-      (topk.length >= k && topk.last._4 <= radius * radius))
-    if (sound)
-      (topk.zipWithIndex.toSeq
-        .map { case ((id, la, lo, d2), i) => ((i + 1).toLong, id, la, lo, d2) }
-        .toDF("rank", "id", "lat", "lon", "d2"), kept, total)
-    else {
-      // tombstone overcounts shrank the radius below provability: pay the
-      // full scan (superset-then-refine, never a wrong answer)
-      val (full, fullKept, fullTotal) = store.read()
-      (graft.ops.SpatialOps.knnSerial(full, qLat, qLon, k), fullKept, fullTotal)
-    }
+    val res = knnStoredPlan(store, Seq((0, qLat, qLon)), k)
+    (res.ranked, res.kept, res.total)
   }
 
-  /** Exact kNN JOIN over a STORED table, planned from the persisted index
-    * summaries (round-4 verdict ask #5 — [[knnStored]] generalized to a
-    * query SET): one driver-side radius bound PER QUERY from the zero-scan
-    * [[fromStore]] index → ONE multi-box manifest-pruned read over the
-    * union of the query balls ([[graft.table.SnapshotStore.readBoxes]] —
-    * files disjoint from every ball never open) → broadcast the tiny
-    * (q_id, center, radius) set, join candidates to the queries whose box
-    * contains them, per-query top-k window. Same output as
-    * [[graft.ops.SpatialOps.knnJoinAgg]] (q_id, rank, id).
-    *
-    * Exactness: each query's candidates are a superset of its radius box,
-    * and the seed radius provably bounds the kth distance — re-audited per
-    * query against the live rows (count ≥ k, kth distance ≤ radius²)
-    * because tombstones make sidecar counts an overcount; failed queries
-    * fall back to the dense join over the full table, never a wrong
-    * answer. */
+  /** Exact kNN JOIN over a STORED table: [[knnStored]]'s plan for a query
+    * SET — one seed radius per query, ONE multi-box pruned read per round.
+    * Same output as [[graft.ops.SpatialOps.knnJoinAgg]] (q_id, rank, id). */
   def knnJoinStored(store: graft.table.SnapshotStore,
                     queries: Seq[(Int, Double, Double)], k: Int): DataFrame =
     knnJoinStoredPruned(store, queries, k)._1
 
-  /** The executed candidate plan of [[knnJoinStored]], pre-audit:
-    * broadcast nested-loop on the box containment predicate (the query
-    * side is tiny by contract; the candidate side is already pruned to the
-    * union of the balls — the |Q|-scale equi-join twin is
-    * SpatialOps.knnJoinPruned, this operator's point is the FILE skip),
-    * then the per-query top-k window. ONE definition shared with
-    * PlanDump's plan evidence, so docs/PLANS.md can never silently
-    * describe a plan the operator no longer executes.
-    * `bounds` = (q_id, qLat, qLon, radius). */
-  private[graft] def knnJoinCandidatePlan(cand: DataFrame,
-      bounds: Seq[(Int, Double, Double, Double)], k: Int): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val q = bounds.toDF("q_id", "qlat", "qlon", "rad")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    cand.join(broadcast(q),
-        col("lat") >= col("qlat") - col("rad") &&
-        col("lat") <= col("qlat") + col("rad") &&
-        col("lon") >= col("qlon") - col("rad") &&
-        col("lon") <= col("qlon") + col("rad"))
-      .withColumn("d2", GeoCols.d2Cols(col("lat"), col("lon"),
-        col("qlat"), col("qlon")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  /** [[knnJoinStored]] + the observed (files read, total files) so specs
-    * can assert file skipping on the join path. */
+  /** [[knnJoinStored]] + the (files read, total files) of the read that
+    * produced the last answers. */
   private[graft] def knnJoinStoredPruned(store: graft.table.SnapshotStore,
                                          queries: Seq[(Int, Double, Double)],
                                          k: Int): (DataFrame, Int, Int) = {
-    require(queries.nonEmpty, "knnJoinStored needs at least one query")
-    val gi = fromStore(store)
-    val bounds = queries.map { case (qid, qla, qlo) =>
-      (qid, qla, qlo, gi.knnSeedRadius(qla, qlo, k))
-    }
-    if (bounds.exists(_._4 == Double.MaxValue)) {
-      // fewer than k rows in the summaries: no ball bounds anything —
-      // the dense join over the full table IS the plan
-      val (full, kept, total) = store.read()
-      return (graft.ops.SpatialOps.knnJoinAgg(full, queries, k), kept, total)
-    }
-    val boxes = bounds.map { case (_, qla, qlo, rad) =>
-      MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
-    }
-    val (cand, kept, total) = store.readBoxes(boxes)
-    val pruned = knnJoinCandidatePlan(cand, bounds, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perQ = pruned.groupBy("q_id")
-      .agg(count(lit(1)).as("n"), max(col("d2")).as("dk"),
-        first(col("rad")).as("rad"))
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      .toMap
-    val bad = queries.map(_._1).filter { qid =>
-      perQ.get(qid) match {
-        case None                => true // ball held zero live rows
-        case Some((n, dk, rad))  => n < k || dk > rad * rad
-      }
-    }.toSet
-    val exactPart = pruned.filter(!col("q_id").isin(bad.toSeq: _*))
-      .select(col("q_id"), col("rank"), col("id"))
-    // on fallback the reported counts must describe the EXECUTED plan, not
-    // the pruned read the audit abandoned (knnStoredPruned's contract): a
-    // prune assert against a tombstone-degraded store would otherwise pass
-    // while the query scanned every file
-    val (out, keptOut, totalOut) =
-      if (bad.isEmpty) (exactPart, kept, total)
-      else {
-        val (full, fKept, fTotal) = store.read()
-        (exactPart.unionAll(graft.ops.SpatialOps.knnJoinAgg(
-          full, queries.filter(qq => bad.contains(qq._1)), k)), fKept, fTotal)
-      }
-    (graft.ops.OpUtil.finish(out, pruned), keptOut, totalOut)
+    val res = knnStoredPlan(store, queries, k)
+    (res.joined, res.kept, res.total)
   }
 
-  /** Index-seeded exact kNN: one driver-side bound from the summary, ONE
-    * Spark job over the pruned cell ring (vs. the iterative probe loop of
-    * SpatialOps.knnRing). Exact: the seed radius provably contains >= k
-    * points and every cell within it is probed. */
+  /** The planner run behind [[knnStored]] and [[knnJoinStored]]. */
+  private[graft] def knnStoredPlan(store: graft.table.SnapshotStore,
+                                   queries: Seq[(Int, Double, Double)],
+                                   k: Int): Knn.Result =
+    Knn.run(Knn.stored(store), queries, k, Knn.seeded(fromStore(store), k))
+
+  /** Index-seeded exact kNN over [[build]]'s clustered frame: the
+    * [[Knn]] planner with [[GlobalIndex.knnSeedRadius]] as the
+    * bound — one driver-side radius from the summary, one Spark job over
+    * the query's box (vs the doubling rounds of SpatialOps.knnRing). */
   def knnIndexed(clustered: DataFrame, gi: GlobalIndex,
-                 qLat: Double, qLon: Double, k: Int,
-                 r: Int = graft.data.Fixtures.JoinRes): DataFrame = {
-    val radius = gi.knnSeedRadius(qLat, qLon, k)
-    val d2 = GeoCols.d2(col("lat"), col("lon"), qLat, qLon)
-    val cand =
-      if (radius == Double.MaxValue) clustered
-      else {
-        val minStep = math.min(CellId.latStep(r), CellId.lonStep(r))
-        val w = math.ceil(radius / minStep).toLong + 1
-        val qy = CellId.cellY(qLat, r); val qx = CellId.cellX(qLon, r)
-        val hi = CellId.n(r) - 1
-        // seed box as a rectangle predicate (4 comparisons) — never an
-        // O(w²) IN list, planner-cheap at any radius/resolution; on a
-        // stored table the same box prunes files via manifest Z ranges
-        clustered.filter(GeoCols.cellBoxPredicate(col("lat"), col("lon"), r,
-          math.max(0L, qy - w), math.min(hi, qy + w),
-          math.max(0L, qx - w), math.min(hi, qx + w)))
-      }
-    cand.withColumn("d2", d2)
-      .orderBy(col("d2"), col("id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(Window.orderBy(col("d2"), col("id"))).cast("long"))
-      .select(col("rank"), col("id"), col("lat"), col("lon"), col("d2"))
-  }
+                 qLat: Double, qLon: Double, k: Int): DataFrame =
+    Knn.run(Knn.inMemory(clustered), Seq((0, qLat, qLon)), k, Knn.seeded(gi, k)).ranked
 }

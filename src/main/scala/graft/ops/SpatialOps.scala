@@ -166,58 +166,13 @@ object SpatialOps {
   }
 
   /** Expanding-ring kNN (op #10): the distributed Hjaltason–Samet
-    * equivalent. Probe growing square rings of cells around the query until
-    * the kth candidate distance is provably below the unprobed-region lower
-    * bound (ring guarantee), then emit the exact top-k from the probed set.
-    * Driver-side iteration over plain Catalyst plans — no custom Strategy;
-    * each probe is a cell-pruned filter + TakeOrderedAndProject.
-    */
-  def knnRing(points: DataFrame, qLat: Double, qLon: Double, k: Int,
-              rOverride: Int = AutoRes): DataFrame = {
-    val r = resolveRes(points, Seq.empty, rOverride)
-    val zPts = points
-      .withColumn("d2", GeoCols.d2(col("lat"), col("lon"), qLat, qLon))
-    val qy = CellId.cellY(qLat, r); val qx = CellId.cellX(qLon, r)
-    val hi = CellId.n(r) - 1
-    val minStep = math.min(CellId.latStep(r), CellId.lonStep(r))
-    // predicate for the cell box of half-width w around the query cell —
-    // a four-comparison rectangle check, never an O(w²) IN list
-    def boxPred(w: Long): Column = GeoCols.cellBoxPredicate(col("lat"), col("lon"), r,
-      math.max(0L, qy - w), math.min(hi, qy + w),
-      math.max(0L, qx - w), math.min(hi, qx + w))
-
-    // geometric half-width growth: ≤ log2(2^r) probe jobs total (vs one
-    // job per ring), each a cell-pruned filter + TakeOrderedAndProject
-    var w = 1L
-    var done = false
-    while (!done && w < hi) {
-      val top = zPts.filter(boxPred(w)).orderBy(col("d2"), col("id")).limit(k)
-        .agg(count(lit(1)).as("n"), max(col("d2")).as("dk")).collect()(0)
-      val n = top.getLong(0)
-      val dk = if (top.isNullAt(1)) Double.MaxValue else top.getDouble(1)
-      // unprobed points sit ≥ w cell-steps away from the query point
-      val guarantee = w * minStep
-      if (n >= k && dk < guarantee * guarantee) done = true
-      else w *= 2
-    }
-    val cand = if (w >= hi) zPts else zPts.filter(boxPred(w))
-    cand.orderBy(col("d2"), col("id")).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("d2"), col("id"))).cast("long"))
-      .select(col("rank"), col("id"), col("lat"), col("lon"), col("d2"))
-  }
-
-  /** Default single-point kNN (op #10): index-seeded one-job path when a
-    * [[graft.index.GlobalIndex]] exists (one driver-side radius bound from
-    * broadcast summaries → one pruned Spark job), expanding-ring probe
-    * otherwise. */
-  def knn(points: DataFrame, index: Option[graft.index.GlobalIndex],
-          qLat: Double, qLon: Double, k: Int,
-          r: Int = AutoRes): DataFrame = index match {
-    case Some(gi) => graft.index.GlobalIndex.knnIndexed(points, gi, qLat, qLon, k,
-      if (r >= 0) r else resolveRes(points, Seq.empty, r))
-    case None     => knnRing(points, qLat, qLon, k, r)
-  }
+    * equivalent — the [[Knn]] planner with doubling ring radii from the
+    * adaptive grid's cell step: each round reads the query's box, and the
+    * audit stops once the kth candidate is provably nearer than anything
+    * outside it; past the grid the read is the whole input. */
+  def knnRing(points: DataFrame, qLat: Double, qLon: Double, k: Int): DataFrame =
+    Knn.run(Knn.inMemory(points), Seq((0, qLat, qLon)), k,
+      Knn.doubling(resolveRes(points, Seq.empty, AutoRes))).ranked
 
   /** Radius sweep (Benchmark.java:126-154 as a query): counts of points
     * inside square boxes of growing half-width around a center — ONE scan,
@@ -735,24 +690,6 @@ object SpatialOps {
       .select(col("cell")).collect().map(_.getLong(0)).toSet
   }
 
-  /** kNN join (op #10 batched): small query set broadcast against the point
-    * cloud; per-query top-k via window. The cross join is map-side only
-    * (broadcast nested loop); the window shuffles |Q|·N candidate rows —
-    * acceptable for small Q. Scale path for large Q: cell-ring candidate
-    * pruning before the window (see KnnJoinPruned below). */
-  def knnJoin(points: DataFrame, queries: Seq[(Int, Double, Double)],
-              k: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val q = queries.toDF("q_id", "qlat", "qlon")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon")), col("id"))
-    points.crossJoin(broadcast(q))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("id"))
-  }
-
   /** Many-polygon PIP join (the scale path when polygons number in the
     * thousands and per-polygon literal plans stop making sense): polygons
     * as DATA — (poly_id, ring array<struct<lat,lon>>) exploded to covering
@@ -780,131 +717,23 @@ object SpatialOps {
       .select(col("poly_id"), col("id"))
   }
 
-  /** Dense kNN join (the documented baseline): every |Q|·N distance is
-    * computed, reduced to k candidates per query per partition BEFORE the
-    * exchange, exact global top-k after — the shuffle carries at most
-    * |Q|·k·partitions rows.
-    *
-    * Kernel form (r6 optimization, measured): the round-4 bounded-heap Aggregator
-    * formulation materialized the |Q|·N crossJoin and pushed every pair
-    * through the Dataset encoder into a typed ObjectHashAggregate —
-    * 4.2 s for 7.2M pairs at sf0.1. This per-partition primitive loop
-    * computes the same distances over decoded (id, lat, lon) rows into
-    * flat per-query bounded arrays (the partial top-k), then ranks the
-    * ≤ |Q|·k·partitions survivors with one tiny window — identical
-    * output (same (d2, id) ordering; spec-pinned vs the window plan). */
+  /** Dense kNN join (the documented baseline): the [[Knn]] planner with
+    * no bound — one unbounded round, so the primitive kernel computes every
+    * |Q|·N distance and only ≤ |Q|·k·partitions partials reach the driver
+    * (the round-4 typed top-k aggregate took 4.2 s for 7.2M pairs at sf0.1). */
   def knnJoinAgg(points: DataFrame, queries: Seq[(Int, Double, Double)],
-                 k: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val qIds = queries.map(_._1).toArray
-    val qLat = queries.map(_._2).toArray
-    val qLon = queries.map(_._3).toArray
-    val partials = points.select(col("id"), col("lat"), col("lon"))
-      .as[(Long, Double, Double)]
-      .mapPartitions { it =>
-        val nq = qIds.length
-        // per-query k slots, flat: candidate replaces the cached worst
-        // only when strictly better by (d2, id) — O(1) reject, O(k)
-        // worst-rescan only on accept (accepts are O(k·log N) per query)
-        val d2s = Array.fill(nq * k)(Double.MaxValue)
-        val ids = Array.fill(nq * k)(Long.MaxValue)
-        val size = new Array[Int](nq)
-        val worst = new Array[Int](nq)
-        def recomputeWorst(q: Int): Unit = {
-          var w = q * k
-          var i = w + 1
-          while (i < q * k + k) {
-            if (d2s(i) > d2s(w) || (d2s(i) == d2s(w) && ids(i) > ids(w))) w = i
-            i += 1
-          }
-          worst(q) = w
-        }
-        it.foreach { case (id, la, lo) =>
-          var q = 0
-          while (q < nq) {
-            val dla = la - qLat(q)
-            val dlo = lo - qLon(q)
-            val d2 = dla * dla + dlo * dlo
-            if (size(q) < k) {
-              val slot = q * k + size(q)
-              d2s(slot) = d2; ids(slot) = id
-              size(q) += 1
-              if (size(q) == k) recomputeWorst(q)
-            } else {
-              val w = worst(q)
-              if (d2 < d2s(w) || (d2 == d2s(w) && id < ids(w))) {
-                d2s(w) = d2; ids(w) = id
-                recomputeWorst(q)
-              }
-            }
-            q += 1
-          }
-        }
-        (0 until nq).iterator.flatMap { q =>
-          (0 until size(q)).iterator.map { i =>
-            (qIds(q), d2s(q * k + i), ids(q * k + i))
-          }
-        }
-      }
-      .toDF("q_id", "d2", "id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("id"))
-  }
+                 k: Int): DataFrame =
+    Knn.run(Knn.inMemory(points), queries, k, Knn.unbounded).joined
 
-  /** Ring-pruned kNN join (the scale path for large query sets): instead
-    * of |Q|·N candidate pairs, each query joins only points whose cell
-    * falls within `rings` Chebyshev rings of the query's cell, then takes
-    * per-query top-k. EXACT when every query finds >= k candidates whose
-    * kth distance is below the probed-region guarantee — the operator
-    * verifies that invariant and falls back to the dense join for the few
-    * queries that fail it (none, on non-degenerate data at sane `rings`). */
+  /** Ring-pruned kNN join: the [[Knn]] planner with one bound of `rings`
+    * cell steps per query — the first round reads only the union of the
+    * query boxes; a query whose kth distance is not provably inside its
+    * box (or that found fewer than k points) falls back to the unbounded
+    * round. */
   def knnJoinPruned(points: DataFrame, queries: Seq[(Int, Double, Double)],
-                    k: Int, rOverride: Int = AutoRes, rings: Int = 2): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val r = resolveRes(points, Seq.empty, rOverride)
-    val qcells = queries.flatMap { case (qid, qla, qlo) =>
-      (0L to rings.toLong).flatMap(CellId.ring(CellId.grid(qla, qlo, r), r, _))
-        .map(c => (qid, qla, qlo, c))
-    }.toDF("q_id", "qlat", "qlon", "qc")
-    val d2 = GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    // materialize the pruned top-k once (≤ |Q|·k rows, lineage kept so a
-    // lost block recomputes): the exactness audit and the final output
-    // both read it without re-running the join
-    val pruned = withCell(points, r)
-      .join(broadcast(qcells), col("cell") === col("qc"))
-      .withColumn("d2", d2)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // exactness check against the FULL query list (not just queries that
-    // found candidates): a query whose ring cells are empty never appears
-    // in `pruned` at all and must fall back to the dense join too
-    val guarantee = rings * math.min(CellId.latStep(r), CellId.lonStep(r))
-    val perQ = pruned.groupBy("q_id")
-      .agg(count(lit(1)).as("n"), max(col("d2")).as("dk"))
-      .collect().map(row => row.getInt(0) -> (row.getLong(1), row.getDouble(2))).toMap
-    val bad = queries.map(_._1).filter { qid =>
-      perQ.get(qid) match {
-        case None           => true // zero candidates in the probed rings
-        case Some((n, dk))  => n < k || dk >= guarantee * guarantee
-      }
-    }.toSet
-    val exactPart = pruned.filter(!col("q_id").isin(bad.toSeq: _*))
-      .select(col("q_id"), col("rank"), col("id"))
-    val out =
-      if (bad.isEmpty) exactPart
-      else exactPart.unionAll(
-        knnJoin(points, queries.filter(q => bad.contains(q._1)), k))
-    // materialize the ≤|Q|·k output, then release the pruned cache —
-    // repeated invocations in a long session must not accrue storage
-    OpUtil.finish(out, pruned)
-  }
+                    k: Int, rOverride: Int = AutoRes, rings: Int = 2): DataFrame =
+    Knn.run(Knn.inMemory(points), queries, k,
+      Knn.rings(resolveRes(points, Seq.empty, rOverride), rings)).joined
 
   /** ε-distance join: all (probe, point) pairs within planar distance
     * `eps` — the spatial self-join the grid makes feasible at scale.

@@ -75,7 +75,7 @@ private[table] final case class CommitLayout(
     newShards: Seq[(String, Seq[FileEntry])],
     inline: Seq[FileEntry])
 
-final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
+final class SnapshotStore(private[graft] val spark: SparkSession, root: String, zRes: Int = 12,
                           histRes: Int = SnapshotStore.DefaultHistRes,
                           bloomKey: Option[String] = None,
                           curve: String = "z",

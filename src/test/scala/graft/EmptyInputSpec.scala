@@ -34,7 +34,7 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(SpatialOps.boxJoinSalted(noPts, Fixtures.boxes).count() == 0)
     assert(SpatialOps.pipJoin(noPts, Fixtures.polys).count() == 0)
     assert(SpatialOps.distanceJoin(noPts, 1.0, 2).count() == 0)
-    assert(SpatialOps.knnJoin(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
+    assert(KnnOracle.knnJoin(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
     assert(SpatialOps.knnJoinPruned(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
   }
 
@@ -53,6 +53,11 @@ class EmptyInputSpec extends AnyFunSuite {
     val got = GlobalIndex.knnStored(st, 0.0, 0.0, 10)
       .orderBy("rank").collect().map(_.getLong(1)).toSeq
     assert(got == Seq(1L, 2L, 3L))
+    // every row deleted: the unbounded round reads nothing and is final —
+    // one read, never a second full scan
+    st.deleteWhere(lit(true), "del-all")
+    val empty = GlobalIndex.knnStoredPlan(st, Seq((0, 0.0, 0.0)), 10)
+    assert(empty.rounds.size == 1 && empty.ranked.count() == 0)
   }
 
   test("kNN with k larger than the table returns all rows, exactly ranked") {
@@ -61,6 +66,32 @@ class EmptyInputSpec extends AnyFunSuite {
     val ring = SpatialOps.knnRing(three, 0.0, 0.0, 10)
       .orderBy("rank").collect().map(_.getLong(1)).toSeq
     assert(ring == Seq(1L, 2L, 3L))
+  }
+
+  test("kNN with k < 1 is rejected by name at every wrapper, before any read") {
+    import graft.index.GlobalIndex
+    val three = Seq((1L, 1.0, 1.0), (2L, 2.0, 2.0), (3L, 3.0, 3.0)).toDF("id", "lat", "lon")
+    val (clustered, gi) = GlobalIndex.build(three, r = 4, numPartitions = 1)
+    val st = new graft.table.SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_k0_store").toString)
+    st.append(three, "tiny", numPartitions = 1)
+    val qs = Fixtures.knnQueries.take(2)
+    for (k <- Seq(0, -1)) {
+      val wrappers = Seq[(String, () => Any)](
+        "knnRing" -> (() => SpatialOps.knnRing(three, 0.0, 0.0, k)),
+        "knnJoinAgg" -> (() => SpatialOps.knnJoinAgg(three, qs, k)),
+        "knnJoinPruned" -> (() => SpatialOps.knnJoinPruned(three, qs, k)),
+        "knnIndexed" -> (() => GlobalIndex.knnIndexed(clustered, gi, 0.0, 0.0, k)),
+        "knnStored" -> (() => GlobalIndex.knnStored(st, 0.0, 0.0, k)),
+        "knnStoredPruned" -> (() => GlobalIndex.knnStoredPruned(st, 0.0, 0.0, k)),
+        "knnJoinStored" -> (() => GlobalIndex.knnJoinStored(st, qs, k)),
+        "knnJoinStoredPruned" -> (() => GlobalIndex.knnJoinStoredPruned(st, qs, k)))
+      for ((name, call) <- wrappers) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"k = $k"), s"$name: ${e.getMessage}")
+      }
+    }
+    clustered.unpersist(false)
   }
 
   test("dedup/text operators on an empty documents table") {

@@ -111,6 +111,21 @@ class PlanSpec extends AnyFunSuite {
     assert(plan(df).contains("TakeOrderedAndProject"), plan(df).take(400))
   }
 
+  test("kNN planner: candidate read + kernel over readBoxes has no Exchange and no Window") {
+    import graft.index.GlobalIndex
+    import graft.ops.Knn
+    val st = new graft.table.SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_planspec_knn").toString)
+    st.append(Points(spark, dir), "u-0", numPartitions = 8)
+    val (frame, kept, total) = Knn.firstRound(Knn.stored(st), Fixtures.knnQueries,
+      Fixtures.knnJoinK, Knn.seeded(GlobalIndex.fromStore(st), Fixtures.knnJoinK))
+    val p = frame.queryExecution.executedPlan.toString
+    assert(p.contains("MapPartitions") && p.contains("FileScan parquet"), p.take(800))
+    assert(!p.contains("Exchange"), s"kNN round must not shuffle:\n$p")
+    assert(!p.contains("Window"), s"kNN round must not rank with a window:\n$p")
+    assert(kept <= total)
+  }
+
   test("whole-stage codegen covers the spatial predicates") {
     // "*(n)" is the WholeStageCodegen stage marker in the compact plan form
     val p = plan(SpatialOps.rangeBox(Points(spark, dir), Fixtures.boxes.head._2))

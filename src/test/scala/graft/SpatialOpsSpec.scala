@@ -290,7 +290,7 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("knnJoin == per-query in-memory top-k") {
-    val got = SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)
+    val got = KnnOracle.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val exp = (for {
       (qid, qla, qlo) <- Fixtures.knnQueries
@@ -313,20 +313,20 @@ class SpatialOpsSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     assert(norm(SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries, Fixtures.knnJoinK)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
+           norm(KnnOracle.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
     // k larger than some partitions' candidate counts (buffer underfill path)
     assert(norm(SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(2), 137)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries.take(2), 137)))
+           norm(KnnOracle.knnJoin(pts, Fixtures.knnQueries.take(2), 137)))
   }
 
   test("knnJoinPruned == knnJoin (with fallback exactness guarantee)") {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     assert(norm(SpatialOps.knnJoinPruned(pts, Fixtures.knnQueries, Fixtures.knnJoinK)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
+           norm(KnnOracle.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
     // force the fallback path: k large enough that 2 rings can't satisfy it
     assert(norm(SpatialOps.knnJoinPruned(pts, Fixtures.knnQueries.take(3), 200)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries.take(3), 200)))
+           norm(KnnOracle.knnJoin(pts, Fixtures.knnQueries.take(3), 200)))
   }
 
   test("knnJoinPruned falls back for queries with ZERO ring candidates") {
@@ -339,7 +339,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     val got = norm(SpatialOps.knnJoinPruned(corner, queries, 3, rOverride = 10, rings = 1))
-    val exp = norm(SpatialOps.knnJoin(corner, queries, 3))
+    val exp = norm(KnnOracle.knnJoin(corner, queries, 3))
     assert(got == exp)
     assert(got.count(_._1 == 1) == 3, "outlier query must still return k rows")
   }

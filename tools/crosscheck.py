@@ -1,19 +1,26 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf-dir parquet tables, compare with the Spark result parquet
-(sorted rows, sorted columns), print per-query verdicts."""
+(sorted rows, sorted columns), print per-query verdicts.
+
+    python3 tools/crosscheck.py SF_DIR OUT_DIR [PREFIX ...]
+
+With query-name prefixes only the matching oracles run (e.g. `q10 q13`);
+with none every oracle runs."""
 import sys, json, glob
 import duckdb
 
-sfdir, outdir = sys.argv[1], sys.argv[2]
+sfdir, outdir, prefixes = sys.argv[1], sys.argv[2], sys.argv[3:]
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+picked = sorted((n, q) for n, q in oracle.items()
+                if not prefixes or any(n.startswith(p) for p in prefixes))
 fails = 0
-for name, sql in sorted(oracle.items()):
+for name, sql in picked:
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"{name}: MISSING spark output"); fails += 1; continue
@@ -40,5 +47,6 @@ for name, sql in sorted(oracle.items()):
             fails += 1
         continue
     print(f"{name}: OK rows={len(g)}")
+print(f"checked {len(picked)} of {len(oracle)}")
 print("FAILURES:", fails)
 sys.exit(1 if fails else 0)
